@@ -1,5 +1,7 @@
 package graft.domain
 
+import scala.collection.mutable
+
 import graft.functions.StableHash
 
 /** G1–G5 enumeration fan-out (reference:
@@ -65,47 +67,67 @@ object Enumerate {
     // anchor = element with the fewest sites → fewest candidate translations
     val anchorEl = s.sites.groupBy(_.element).minBy(_._2.size)._1
     val anchor = s.sites.find(_.element == anchorEl).get
-    val range = Seq(-1, 0, 1)
-    val ops = for {
-      w00 <- range; w01 <- range; w02 <- range
-      w10 <- range; w11 <- range; w12 <- range
-      w20 <- range; w21 <- range; w22 <- range
-      w = Array(Array(w00, w01, w02), Array(w10, w11, w12), Array(w20, w21, w22))
-      det = w00 * (w11 * w22 - w12 * w21) - w01 * (w10 * w22 - w12 * w20) +
-        w02 * (w10 * w21 - w11 * w20)
-      if det == 1 || det == -1
-      // metric preservation: (W·G·Wᵀ)ij == Gij
-      if (0 until 3).forall(i => (0 until 3).forall { j =>
-        var acc = 0.0
-        var p = 0
-        while (p < 3) {
-          var q = 0
-          while (q < 3) { acc += w(i)(p) * g(p)(q) * w(j)(q); q += 1 }
-          p += 1
-        }
-        math.abs(acc - g(i)(j)) < 1e-6
-      })
-      // space-group test: ∃t s.t. f·W + t maps the site set onto itself
-      if {
-        def rowTimesW(f: Seq[Double]): Array[Double] = Array(
-          f(0) * w(0)(0) + f(1) * w(1)(0) + f(2) * w(2)(0),
-          f(0) * w(0)(1) + f(1) * w(1)(1) + f(2) * w(2)(1),
-          f(0) * w(0)(2) + f(1) * w(1)(2) + f(2) * w(2)(2))
-        val aw = rowTimesW(anchor.frac_coords)
-        s.sites.filter(_.element == anchorEl).exists { target =>
-          val t = Array(target.frac_coords(0) - aw(0),
-            target.frac_coords(1) - aw(1), target.frac_coords(2) - aw(2))
-          s.sites.forall { p =>
-            val pw = rowTimesW(p.frac_coords)
-            s.sites.exists(q => q.element == p.element &&
-              dWrap(wrap(pw(0) + t(0)), wrap(q.frac_coords(0))) < tol &&
-              dWrap(wrap(pw(1) + t(1)), wrap(q.frac_coords(1))) < tol &&
-              dWrap(wrap(pw(2) + t(2)), wrap(q.frac_coords(2))) < tol)
+    val sites = s.sites.toIndexedSeq
+    val fr = sites.map(_.frac_coords.toArray)
+    val candidates = sites.indices.filter(sites(_).element == anchorEl)
+    val af = anchor.frac_coords.toArray
+    // metric preservation: (W·G·Wᵀ)ij == Gij
+    def preservesMetric(w: Array[Array[Int]]): Boolean = {
+      var i = 0
+      while (i < 3) {
+        var j = 0
+        while (j < 3) {
+          var acc = 0.0
+          var p = 0
+          while (p < 3) {
+            var q = 0
+            while (q < 3) { acc += w(i)(p) * g(p)(q) * w(j)(q); q += 1 }
+            p += 1
           }
+          if (!(math.abs(acc - g(i)(j)) < 1e-6)) return false
+          j += 1
+        }
+        i += 1
+      }
+      true
+    }
+    // space-group test: ∃t s.t. f·W + t maps the site set onto itself
+    def mapsSites(w: Array[Array[Int]]): Boolean = {
+      def rowTimesW(f: Array[Double]): Array[Double] = Array(
+        f(0) * w(0)(0) + f(1) * w(1)(0) + f(2) * w(2)(0),
+        f(0) * w(0)(1) + f(1) * w(1)(1) + f(2) * w(2)(1),
+        f(0) * w(0)(2) + f(1) * w(1)(2) + f(2) * w(2)(2))
+      val aw = rowTimesW(af)
+      val pws = fr.map(rowTimesW)
+      candidates.exists { ti =>
+        val t0 = fr(ti)(0) - aw(0); val t1 = fr(ti)(1) - aw(1); val t2 = fr(ti)(2) - aw(2)
+        sites.indices.forall { pi =>
+          val pw = pws(pi)
+          sites.indices.exists(qi => sites(qi).element == sites(pi).element &&
+            dWrap(wrap(pw(0) + t0), wrap(fr(qi)(0))) < tol &&
+            dWrap(wrap(pw(1) + t1), wrap(fr(qi)(1))) < tol &&
+            dWrap(wrap(pw(2) + t2), wrap(fr(qi)(2))) < tol)
         }
       }
-    } yield w
-    ops
+    }
+    // the 3⁹ candidates with entries −1..1, w00 slowest and w22 fastest;
+    // only the |det| = 1 ones are materialized
+    val ops = Vector.newBuilder[Array[Array[Int]]]
+    val e = new Array[Int](9)
+    var code = 0
+    while (code < 19683) {
+      var c = code
+      var d = 8
+      while (d >= 0) { e(d) = c % 3 - 1; c /= 3; d -= 1 }
+      val det = e(0) * (e(4) * e(8) - e(5) * e(7)) - e(1) * (e(3) * e(8) - e(5) * e(6)) +
+        e(2) * (e(3) * e(7) - e(4) * e(6))
+      if (det == 1 || det == -1) {
+        val w = Array(Array(e(0), e(1), e(2)), Array(e(3), e(4), e(5)), Array(e(6), e(7), e(8)))
+        if (preservesMetric(w) && mapsSites(w)) ops += w
+      }
+      code += 1
+    }
+    ops.result()
   }
 
   /** Symmetrically-DISTINCT Miller indices up to maxMiller for a given
@@ -124,8 +146,8 @@ object Enumerate {
     // visit all-positive "conventional" facets first so they become the
     // emitted representative of their orbit
     val ordered = candidates.sortBy(m => (-m(0), -m(1), -m(2)))
-    val seen = scala.collection.mutable.Set.empty[Seq[Int]]
-    val out = scala.collection.mutable.ArrayBuffer.empty[Seq[Int]]
+    val seen = mutable.Set.empty[Seq[Int]]
+    val out = mutable.ArrayBuffer.empty[Seq[Int]]
     for (m <- ordered if !seen.contains(m)) {
       out += m
       for (w <- ops) {
@@ -229,10 +251,6 @@ object Enumerate {
       Array(m(1)(0) * m(2)(1) - m(1)(1) * m(2)(0),
         m(0)(1) * m(2)(0) - m(0)(0) * m(2)(1),
         m(0)(0) * m(1)(1) - m(0)(1) * m(1)(0)))
-    def newFrac(f: Array[Double]): Array[Double] = Array(
-      (f(0) * adj(0)(0) + f(1) * adj(1)(0) + f(2) * adj(2)(0)) / det,
-      (f(0) * adj(0)(1) + f(1) * adj(1)(1) + f(2) * adj(2)(1)) / det,
-      (f(0) * adj(0)(2) + f(1) * adj(1)(2) + f(2) * adj(2)(2)) / det)
     // new lattice rows: Mᵢ · A
     val a = bulk.lattice.map(_.toArray).toArray
     val newLat = (0 until 3).map(i => (0 until 3).map(c =>
@@ -241,29 +259,52 @@ object Enumerate {
     // lattice modulo the new cell contributes exactly one wrapped site →
     // |det M| sites per basis atom (exact conservation). The scan box is
     // wide enough to hit every residue class; wrapping + dedup collapses
-    // repeats.
-    val bound = (0 until 3).map(c => m.map(row => math.abs(row(c))).sum + 1)
+    // repeats: the first point of each rounded class, in scan order, is the
+    // one kept, and only it becomes a Site.
+    val Seq(bx, by, bz) = (0 until 3).map(c => m.map(row => math.abs(row(c))).sum + 1)
     def wrap(x: Double): Double = { val w = x - math.floor(x); if (w >= 1.0) 0.0 else w }
-    val sites = for {
-      s <- bulk.sites
-      tx <- -bound(0) to bound(0)
-      ty <- -bound(1) to bound(1)
-      tz <- -bound(2) to bound(2)
-      f = Array(s.frac_coords(0) + tx, s.frac_coords(1) + ty, s.frac_coords(2) + tz)
-      g = newFrac(f)
-    } yield s.copy(frac_coords = Seq(
-      // translate so the termination plane `shift` (a stacking position
-      // from shifts(), g₂ = (h·f)/nLayers per layer) lands just below the
-      // cell top: that plane becomes the exposed surface after the vacuum
-      // cut. ε ≪ the shifts() cluster tolerance keeps the plane itself on
-      // the kept side of the wrap.
-      wrap(g(0)), wrap(g(1)), wrap(g(2) - (shift + 1e-4) / nLayers)))
-    val unique = sites
-      .groupBy(s => (s.element, s.wyckoff,
-        math.round(wrap(s.frac_coords(0) + 1e-7) * 1e6),
-        math.round(wrap(s.frac_coords(1) + 1e-7) * 1e6),
-        math.round(wrap(s.frac_coords(2) + 1e-7) * 1e6)))
-      .map(_._2.head).toSeq
+    @inline def rounded(x: Double): Long = math.round(wrap(x + 1e-7) * 1e6)
+    // translate so the termination plane `shift` (a stacking position from
+    // shifts(), g₂ = (h·f)/nLayers per layer) lands just below the cell
+    // top: that plane becomes the exposed surface after the vacuum cut.
+    // ε ≪ the shifts() cluster tolerance keeps the plane itself on the
+    // kept side of the wrap.
+    val cut = (shift + 1e-4) / nLayers
+    val a00 = adj(0)(0); val a01 = adj(0)(1); val a02 = adj(0)(2)
+    val a10 = adj(1)(0); val a11 = adj(1)(1); val a12 = adj(1)(2)
+    val a20 = adj(2)(0); val a21 = adj(2)(1); val a22 = adj(2)(2)
+    // rounded positions seen, per (element, wyckoff); each rounded
+    // coordinate lies in 0..10⁶ < 2²⁰, so a position packs into one Long
+    val seen = mutable.HashMap.empty[(String, String), mutable.LongMap[Unit]]
+    val kept = mutable.ArrayBuffer.empty[Site]
+    bulk.sites.foreach { s =>
+      val classes = seen.getOrElseUpdate((s.element, s.wyckoff), mutable.LongMap.empty[Unit])
+      val s0 = s.frac_coords(0); val s1 = s.frac_coords(1); val s2 = s.frac_coords(2)
+      var tx = -bx
+      while (tx <= bx) {
+        val f0 = s0 + tx
+        var ty = -by
+        while (ty <= by) {
+          val f1 = s1 + ty
+          var tz = -bz
+          while (tz <= bz) {
+            val f2 = s2 + tz
+            val x = wrap((f0 * a00 + f1 * a10 + f2 * a20) / det)
+            val y = wrap((f0 * a01 + f1 * a11 + f2 * a21) / det)
+            val z = wrap((f0 * a02 + f1 * a12 + f2 * a22) / det - cut)
+            val key = (rounded(x) << 40) | (rounded(y) << 20) | rounded(z)
+            if (!classes.contains(key)) {
+              classes.update(key, ())
+              kept += s.copy(frac_coords = Seq(x, y, z))
+            }
+            tz += 1
+          }
+          ty += 1
+        }
+        tx += 1
+      }
+    }
+    val unique = kept.toSeq
       .sortBy(s => (s.element, s.frac_coords(2), s.frac_coords(0), s.frac_coords(1)))
     // VACUUM: a slab is not a periodic supercell — without vacuum along the
     // stacking axis every "surface" site keeps bulk coordination and the

@@ -52,10 +52,85 @@ object Geometry {
     s.lattice.map(_.toArray).toArray
 
   /** Fractional → cartesian. */
-  def cart(lat: Array[Array[Double]], f: Seq[Double]): Array[Double] = Array(
-    f(0) * lat(0)(0) + f(1) * lat(1)(0) + f(2) * lat(2)(0),
-    f(0) * lat(0)(1) + f(1) * lat(1)(1) + f(2) * lat(2)(1),
-    f(0) * lat(0)(2) + f(1) * lat(1)(2) + f(2) * lat(2)(2))
+  def cart(lat: Array[Array[Double]], f: Seq[Double]): Array[Double] = {
+    val f0 = f(0); val f1 = f(1); val f2 = f(2)
+    Array(
+      f0 * lat(0)(0) + f1 * lat(1)(0) + f2 * lat(2)(0),
+      f0 * lat(0)(1) + f1 * lat(1)(1) + f2 * lat(2)(1),
+      f0 * lat(0)(2) + f1 * lat(1)(2) + f2 * lat(2)(2))
+  }
+
+  /** The 3×3×3 periodic-image kernel behind [[pbcDistance]] and
+    * [[countImagesWithin]], on primitives: the lattice is unpacked once and
+    * no image allocates. Each image's cartesian length is the expression
+    * [[cart]] + [[norm]] evaluate, in the same order, so results are
+    * bit-identical to them.
+    */
+  private final class Images(lat: Array[Array[Double]]) {
+    private val l00 = lat(0)(0); private val l01 = lat(0)(1); private val l02 = lat(0)(2)
+    private val l10 = lat(1)(0); private val l11 = lat(1)(1); private val l12 = lat(1)(2)
+    private val l20 = lat(2)(0); private val l21 = lat(2)(1); private val l22 = lat(2)(2)
+
+    @inline def length(f0: Double, f1: Double, f2: Double): Double = {
+      val x = f0 * l00 + f1 * l10 + f2 * l20
+      val y = f0 * l01 + f1 * l11 + f2 * l21
+      val z = f0 * l02 + f1 * l12 + f2 * l22
+      math.sqrt(x * x + y * y + z * z)
+    }
+
+    def minDistance(a0: Double, a1: Double, a2: Double,
+                    b0: Double, b1: Double, b2: Double): Double = {
+      var best = Double.MaxValue
+      var i = -1
+      while (i <= 1) {
+        var j = -1
+        while (j <= 1) {
+          var k = -1
+          while (k <= 1) {
+            val dist = length(b0 + i - a0, b1 + j - a1, b2 + k - a2)
+            if (dist < best) best = dist
+            k += 1
+          }
+          j += 1
+        }
+        i += 1
+      }
+      best
+    }
+
+    def countWithin(a0: Double, a1: Double, a2: Double,
+                    b0: Double, b1: Double, b2: Double,
+                    cutoff: Double, excludeSelf: Boolean): Int = {
+      var n = 0
+      var i = -1
+      while (i <= 1) {
+        var j = -1
+        while (j <= 1) {
+          var k = -1
+          while (k <= 1) {
+            val d = length(b0 + i - a0, b1 + j - a1, b2 + k - a2)
+            if (d <= cutoff + 1e-8 && (!excludeSelf || d > 1e-8)) n += 1
+            k += 1
+          }
+          j += 1
+        }
+        i += 1
+      }
+      n
+    }
+  }
+
+  /** Site fractional coordinates flattened to (x₀, y₀, z₀, x₁, …). */
+  private def fracArray(s: Structure): Array[Double] = {
+    val out = new Array[Double](3 * s.sites.size)
+    var i = 0
+    s.sites.foreach { site =>
+      val f = site.frac_coords
+      out(i) = f(0); out(i + 1) = f(1); out(i + 2) = f(2)
+      i += 3
+    }
+    out
+  }
 
   /** U1 `surface_area` (filter_utils.py:394-405): ‖a⃗ × b⃗‖ of the first two
     * lattice vectors.
@@ -81,25 +156,8 @@ object Geometry {
   /** All pairwise distances under periodic boundary conditions via direct
     * 3×3×3 image search (exact for cutoffs ≤ one cell span).
     */
-  def pbcDistance(lat: Array[Array[Double]], fa: Seq[Double], fb: Seq[Double]): Double = {
-    var best = Double.MaxValue
-    var i = -1
-    while (i <= 1) {
-      var j = -1
-      while (j <= 1) {
-        var k = -1
-        while (k <= 1) {
-          val d = cart(lat, Seq(fb(0) + i - fa(0), fb(1) + j - fa(1), fb(2) + k - fa(2)))
-          val dist = norm(d)
-          if (dist < best) best = dist
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    best
-  }
+  def pbcDistance(lat: Array[Array[Double]], fa: Seq[Double], fb: Seq[Double]): Double =
+    new Images(lat).minDistance(fa(0), fa(1), fa(2), fb(0), fb(1), fb(2))
 
   /** Count periodic images of site b within `cutoff` of site a — in a small
     * cell one neighbor basis atom contributes SEVERAL images (e.g. fcc
@@ -107,48 +165,34 @@ object Geometry {
     * must count images, not minimum-image pairs.
     */
   def countImagesWithin(lat: Array[Array[Double]], fa: Seq[Double], fb: Seq[Double],
-                        cutoff: Double, excludeSelf: Boolean): Int = {
-    var n = 0
-    var i = -1
-    while (i <= 1) {
-      var j = -1
-      while (j <= 1) {
-        var k = -1
-        while (k <= 1) {
-          val d = norm(cart(lat,
-            Seq(fb(0) + i - fa(0), fb(1) + j - fa(1), fb(2) + k - fa(2))))
-          if (d <= cutoff + 1e-8 && (!excludeSelf || d > 1e-8)) n += 1
-          k += 1
-        }
-        j += 1
-      }
-      i += 1
-    }
-    n
-  }
+                        cutoff: Double, excludeSelf: Boolean): Int =
+    new Images(lat).countWithin(fa(0), fa(1), fa(2), fb(0), fb(1), fb(2), cutoff, excludeSelf)
 
   /** U2 `get_bond_length` (filter_utils.py:408-432): per distinct Wyckoff
     * site, nearest-neighbor distance × neighborFactor.
     */
   def bondLengths(s: Structure, neighborFactor: Double = 1.1): Map[String, Double] = {
-    val lat = latticeRows(s)
+    val img = new Images(latticeRows(s))
+    val f = fracArray(s)
     // a site's own periodic images are legitimate nearest neighbors (the
     // ONLY ones in a one-atom primitive cell): the shortest nonzero
     // lattice translation bounds nn from above
     var selfImage = Double.MaxValue
     for (i <- -1 to 1; j <- -1 to 1; k <- -1 to 1 if !(i == 0 && j == 0 && k == 0)) {
-      val d = norm(cart(lat, Seq(i.toDouble, j.toDouble, k.toDouble)))
+      val d = img.length(i.toDouble, j.toDouble, k.toDouble)
       if (d < selfImage) selfImage = d
     }
     val byWyckoff = s.sites.zipWithIndex.groupBy(_._1.wyckoff)
     byWyckoff.map { case (w, sites) =>
-      val (site, idx) = sites.head
+      val a = 3 * sites.head._2
       var nn = selfImage
-      s.sites.zipWithIndex.foreach { case (other, oidx) =>
-        if (oidx != idx) {
-          val d = pbcDistance(lat, site.frac_coords, other.frac_coords)
+      var b = 0
+      while (b < f.length) {
+        if (b != a) {
+          val d = img.minDistance(f(a), f(a + 1), f(a + 2), f(b), f(b + 1), f(b + 2))
           if (d > 1e-8 && d < nn) nn = d
         }
+        b += 3
       }
       w -> nn * neighborFactor
     }
@@ -157,30 +201,38 @@ object Geometry {
   /** U3 `get_bulk_cn` (filter_utils.py:435-456): per-Wyckoff coordination
     * number = neighbors within the bond length.
     */
-  def bulkCoordination(s: Structure, neighborFactor: Double = 1.1): Map[String, Int] = {
-    val lat = latticeRows(s)
-    val bl = bondLengths(s, neighborFactor)
+  def bulkCoordination(s: Structure, neighborFactor: Double = 1.1): Map[String, Int] =
+    bulkCoordination(s, bondLengths(s, neighborFactor))
+
+  private def bulkCoordination(s: Structure, bl: Map[String, Double]): Map[String, Int] = {
+    val img = new Images(latticeRows(s))
+    val f = fracArray(s)
     s.sites.zipWithIndex.groupBy(_._1.wyckoff).map { case (w, sites) =>
-      val (site, _) = sites.head
-      val cutoff = bl(w)
-      val cn = s.sites.zipWithIndex.map { case (other, oidx) =>
-        countImagesWithin(lat, site.frac_coords, other.frac_coords, cutoff,
-          excludeSelf = true)
-      }.sum
-      w -> cn
+      w -> imagesWithin(img, f, 3 * sites.head._2, bl(w))
     }
+  }
+
+  /** Images of every site within `cutoff` of the site at offset `a` of `f`
+    * (the site's own zero image excluded).
+    */
+  private def imagesWithin(img: Images, f: Array[Double], a: Int, cutoff: Double): Int = {
+    var cn = 0
+    var b = 0
+    while (b < f.length) {
+      cn += img.countWithin(f(a), f(a + 1), f(a + 2), f(b), f(b + 1), f(b + 2),
+        cutoff, excludeSelf = true)
+      b += 3
+    }
+    cn
   }
 
   /** Per-site slab coordination (same cutoff rule, on the slab). */
   def siteCoordination(s: Structure, cutoffByWyckoff: Map[String, Double]): Seq[Int] = {
-    val lat = latticeRows(s)
-    s.sites.map { site =>
-      val cutoff = cutoffByWyckoff.getOrElse(site.wyckoff,
-        cutoffByWyckoff.values.foldLeft(2.5)(math.max))
-      s.sites.map { other =>
-        countImagesWithin(lat, site.frac_coords, other.frac_coords, cutoff,
-          excludeSelf = true)
-      }.sum
+    val img = new Images(latticeRows(s))
+    val f = fracArray(s)
+    lazy val fallback = cutoffByWyckoff.values.foldLeft(2.5)(math.max)
+    s.sites.zipWithIndex.map { case (site, i) =>
+      imagesWithin(img, f, 3 * i, cutoffByWyckoff.getOrElse(site.wyckoff, fallback))
     }
   }
 
@@ -193,49 +245,67 @@ object Geometry {
   private def isTopSite(site: Site, comZ: Double): Boolean =
     site.frac_coords(2) >= comZ
 
-  /** U4 `get_total_bb` (filter_utils.py:459-490): Σ over top-surface sites
-    * of (bulk_cn − slab_cn)/bulk_cn. (The reference's `dask_dict`
-    * warning-path bug at :487 is intentionally not reproduced.)
-    */
-  def totalBrokenBonds(slab: Structure, bulkCn: Map[String, Int],
-                       cutoffs: Map[String, Double]): Double = {
-    val cn = siteCoordination(slab, cutoffs)
+  /** Σ over top-surface sites of `f(site, slab CN)`, in site order. */
+  private def sumTop(slab: Structure, cn: Seq[Int])(f: (Site, Int) => Double): Double = {
     val comZ = centerOfMass(slab)(2)
-    slab.sites.zip(cn).collect {
-      case (site, c) if isTopSite(site, comZ) =>
-        val b = bulkCn.getOrElse(site.wyckoff, 12)
-        if (b > 0) (b - c).max(0).toDouble / b else 0.0
-    }.sum
+    var acc = 0.0
+    slab.sites.iterator.zip(cn.iterator).foreach { case (site, c) =>
+      if (isTopSite(site, comZ)) acc += f(site, c)
+    }
+    acc
   }
 
-  /** U5 `get_total_nn` (filter_utils.py:493-523): Σ surface-site neighbor
-    * counts over the top surface (z ≥ COM_z).
+  /** U4 `get_total_bb` (filter_utils.py:459-490): Σ over top-surface sites
+    * of (bulk_cn − slab_cn)/bulk_cn, given the slab CN `cn`. (The
+    * reference's `dask_dict` warning-path bug at :487 is intentionally not
+    * reproduced.)
     */
-  def totalNearestNeighbors(slab: Structure, cutoffs: Map[String, Double]): Double = {
-    val cn = siteCoordination(slab, cutoffs)
-    val comZ = centerOfMass(slab)(2)
-    slab.sites.zip(cn).collect {
-      case (site, c) if isTopSite(site, comZ) => c.toDouble
-    }.sum
+  private def brokenBonds(slab: Structure, cn: Seq[Int], bulkCn: Map[String, Int]): Double =
+    sumTop(slab, cn) { (site, c) =>
+      val b = bulkCn.getOrElse(site.wyckoff, 12)
+      if (b > 0) (b - c).max(0).toDouble / b else 0.0
+    }
+
+  /** U5 `get_total_nn` (filter_utils.py:493-523): Σ surface-site neighbor
+    * counts over the top surface (z ≥ COM_z), given the slab CN `cn`.
+    */
+  private def nearestNeighbors(slab: Structure, cn: Seq[Int]): Double =
+    sumTop(slab, cn)((_, c) => c.toDouble)
+
+  /** The slab scores of one bulk (U6 `broken_bonds`, U7 `surface_density`).
+    * The bulk half — bond-length cutoffs (U2) and bulk coordination (U3) —
+    * is computed once here and shared by every slab of the bulk, and the
+    * slab coordination is computed once per slab for all requested scores.
+    */
+  final class SlabScorer(bulk: Structure) {
+    private val cutoffs = bondLengths(bulk)
+    private lazy val bulkCn = bulkCoordination(bulk, cutoffs)
+
+    /** `slab`'s score for each of `names`, in that order. */
+    def scores(slab: Structure, names: Seq[String]): Seq[Double] = {
+      val cn = siteCoordination(slab, cutoffs)
+      names.map {
+        case "broken_bonds"    => brokenBonds(slab, cn, bulkCn) / (2.0 * surfaceArea(slab))
+        case "surface_density" => nearestNeighbors(slab, cn) / (2.0 * surfaceArea(slab))
+        case other => throw new IllegalArgumentException(s"unknown slab score '$other'")
+      }
+    }
   }
 
   /** U6 broken-bond surface-energy proxy (filter_utils.py:526-544). */
-  def brokenBondScore(slab: Structure, bulk: Structure): Double = {
-    val cutoffs = bondLengths(bulk)
-    totalBrokenBonds(slab, bulkCoordination(bulk), cutoffs) / (2.0 * surfaceArea(slab))
-  }
+  def brokenBondScore(slab: Structure, bulk: Structure): Double =
+    new SlabScorer(bulk).scores(slab, Seq("broken_bonds")).head
 
   /** U7 surface-density score (filter_utils.py:547-565). */
-  def surfaceDensityScore(slab: Structure, bulk: Structure): Double = {
-    val cutoffs = bondLengths(bulk)
-    totalNearestNeighbors(slab, cutoffs) / (2.0 * surfaceArea(slab))
-  }
+  def surfaceDensityScore(slab: Structure, bulk: Structure): Double =
+    new SlabScorer(bulk).scores(slab, Seq("surface_density")).head
 
   /** U15 `_get_connectivity` (flag_systems.py:98-114): covalent-radius
     * neighbor list → dense adjacency matrix.
     */
   def connectivity(s: Structure, cushion: Double = 1.2): Array[Array[Boolean]] = {
-    val lat = latticeRows(s)
+    val img = new Images(latticeRows(s))
+    val f = fracArray(s)
     val n = s.sites.size
     val adj = Array.ofDim[Boolean](n, n)
     var i = 0
@@ -244,7 +314,8 @@ object Geometry {
       while (j < n) {
         val ri = covalentRadius.getOrElse(s.sites(i).element, defaultRadius)
         val rj = covalentRadius.getOrElse(s.sites(j).element, defaultRadius)
-        val d = pbcDistance(lat, s.sites(i).frac_coords, s.sites(j).frac_coords)
+        val d = img.minDistance(f(3 * i), f(3 * i + 1), f(3 * i + 2),
+          f(3 * j), f(3 * j + 1), f(3 * j + 2))
         if (d <= (ri + rj) * cushion) { adj(i)(j) = true; adj(j)(i) = true }
         j += 1
       }

@@ -1,5 +1,6 @@
 package graft.domain
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,11 +29,27 @@ class MemoCache(spark: SparkSession, root: String, operator: String, codeVersion
 
   private val path = s"$root/$operator/v=$codeVersion"
 
-  def read(): Option[DataFrame] =
-    try {
+  /** The memo table, or None while nothing has been written to it. A table
+    * that exists but cannot be read, or has no `key` column, is an error:
+    * treating it as empty would recompute and append every key again.
+    */
+  def read(): Option[DataFrame] = {
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    // a directory holding only `_temporary`/`_SUCCESS`-style entries (a
+    // crashed first write) has no committed rows yet
+    val committed = fs.exists(dir) && fs.listStatus(dir).exists { f =>
+      val name = f.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }
+    if (!committed) None
+    else {
       val df = spark.read.parquet(path)
-      if (df.columns.contains("key")) Some(df) else None
-    } catch { case _: Exception => None }
+      if (!df.columns.contains("key"))
+        throw new IllegalStateException(s"memo table $path has no key column")
+      Some(df)
+    }
+  }
 
   /** Run `compute` only for keys not yet memoized; the append-write is the
     * ONE execution of `compute` (the result handed back is re-read from the

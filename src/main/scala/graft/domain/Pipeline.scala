@@ -21,8 +21,12 @@ import graft.ops.{Filters, Grouped}
   *  - max_miller is an ARGUMENT of enumeration, not a post-filter
   *    (prediction_steps.py:227-237): the plan compiler owns this rewrite —
   *    Catalyst cannot push a predicate into an opaque flatMap.
-  *  - Slab fan-out skew (one bulk → hundreds of slabs) is rebalanced by a
-  *    post-explode repartition + AQE (replaces Dask graph surgery D2/D3).
+  *  - Slab fan-out skew (one bulk → hundreds of slabs) is NOT spread by
+  *    the post-explode repartition: the exchange carries well under a MB,
+  *    so AQE coalesces it into a single task. CPU-heavy per-row work (slab
+  *    enumeration and the slab scores) therefore runs in the typed flatMap,
+  *    before that exchange; the repartition only co-locates the window
+  *    groups (replaces Dask graph surgery D2/D3).
   *  - Grouped slab filters are explicit `Window.partitionBy` — the
   *    reference relied on one-bulk-per-partition co-location
   *    (prediction_steps.py:242), an implicit contract Spark makes explicit.
@@ -91,49 +95,52 @@ object Pipeline {
           .observe(f"bulk_${i + 1}%02d_${flt.getClass.getSimpleName}", count(lit(1)))
     }
 
-  /** Stage 2: slab enumeration (typed flatMap G1) + grouped slab filters. */
+  /** Stage 2: slab enumeration (typed flatMap G1) + grouped slab filters.
+    * The scores the filters rank by are computed inside the flatMap, once
+    * per slab, on the Scala objects it already holds, and carried as the
+    * `slab_scores` array column that the filters index into.
+    */
   def enumerateSurfaces(spark: SparkSession, bulks: Dataset[Bulk],
                         maxMiller: Int, slabFilters: Seq[SlabFilterCfg]): DataFrame = {
     import spark.implicits._
     // max_miller possibly tightened by config (argument pushdown, §4.1)
     val mm = slabFilters.collectFirst { case MaxMillerCfg(v) => v }
       .map(math.min(_, maxMiller)).getOrElse(maxMiller)
-    val surfaces = bulks.flatMap(b => Enumerate.enumerateSlabs(b, mm))
-      .toDF()
-      // rebalance post-explode skew (D3): hash on the natural group key so
-      // downstream windows reuse the partitioning
+    val scoreNames = slabFilters.collect {
+      case BestShift(score, _)       => score
+      case TopKByScore(score, _, _) => score
+    }.distinct
+    val surfaces = bulks.flatMap { b =>
+      val slabs = Enumerate.enumerateSlabs(b, mm)
+      if (scoreNames.isEmpty) slabs.map(ScoredSurface(_, Nil))
+      else {
+        val scorer = new Geometry.SlabScorer(b.bulk_structure)
+        slabs.map(s => ScoredSurface(s, scorer.scores(s.slab_structure, scoreNames)))
+      }
+    }.toDF()
+      // hash on the natural group key so downstream windows reuse the
+      // partitioning
       .repartition(col("bulk_id"), col("slab_millers"))
-    val scoreUdf = udf((slab: Structure, bulk: Structure, score: String) =>
-      score match {
-        case "surface_density" => Geometry.surfaceDensityScore(slab, bulk)
-        case "broken_bonds"    => Geometry.brokenBondScore(slab, bulk)
-        case other => throw new IllegalArgumentException(
-          s"unknown slab score '$other'") // validate() should have caught it
-      })
+    def score(name: String) = col("slab_scores")(scoreNames.indexOf(name))
     // observe names indexed by position (like bulk filters): two filters of
     // the same kind must not collide into one duplicate observation name
     slabFilters.zipWithIndex
       .foldLeft(surfaces.observe("surf_00_enumerated", count(lit(1)))) {
         case (acc, (MaxMillerCfg(_), _)) => acc // consumed as an argument above
-        case (acc, (BestShift(score, thr), i)) =>
-          Grouped.withinThresholdOfMin(
-            acc.withColumn("__score",
-              scoreUdf(col("slab_structure"), col("bulk_structure"), lit(score))),
-            Seq("bulk_id", "slab_millers"), col("__score"), thr)
-            .drop("__score")
+        case (acc, (BestShift(name, thr), i)) =>
+          Grouped.withinThresholdOfMin(acc, Seq("bulk_id", "slab_millers"), score(name), thr)
             .observe(f"surf_${i + 1}%02d_best_shift", count(lit(1)))
-        case (acc, (TopKByScore(score, k, p), i)) =>
-          val scored = acc.withColumn("__score",
-            scoreUdf(col("slab_structure"), col("bulk_structure"), lit(score)))
+        case (acc, (TopKByScore(name, k, p), i)) =>
+          val tieBreak = Seq(col("slab_millers"), col("slab_shift"), col("slab_top"))
           val kept = (k, p) match {
-            case (Some(kk), _) => Grouped.groupTopK(scored, Seq("bulk_id"),
-              col("__score"), Seq(col("slab_millers"), col("slab_shift"), col("slab_top")), kk)
-            case (_, Some(pp)) => Grouped.groupTopProportion(scored, Seq("bulk_id"),
-              col("__score"), Seq(col("slab_millers"), col("slab_shift"), col("slab_top")), pp)
-            case _ => scored
+            case (Some(kk), _) => Grouped.groupTopK(acc, Seq("bulk_id"), score(name), tieBreak, kk)
+            case (_, Some(pp)) =>
+              Grouped.groupTopProportion(acc, Seq("bulk_id"), score(name), tieBreak, pp)
+            case _ => acc
           }
-          kept.drop("__score").observe(f"surf_${i + 1}%02d_topk", count(lit(1)))
+          kept.observe(f"surf_${i + 1}%02d_topk", count(lit(1)))
       }
+      .drop("slab_scores")
   }
 
   /** Stage 3: surfaces × adsorbates (J1 broadcast cross join) + adslab

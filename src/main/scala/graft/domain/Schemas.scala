@@ -60,6 +60,37 @@ case class Surface(
     slab_natoms: Int,
     slab_structure: Structure)
 
+/** A [[Surface]] plus `slab_scores`: the scores the screen's slab filters
+  * rank by, in the order the pipeline asked for them. They are computed
+  * inside the enumeration flatMap, where the slab and bulk already exist as
+  * Scala objects (see `Pipeline.enumerateSurfaces`).
+  */
+case class ScoredSurface(
+    bulk_id: String,
+    bulk_data_source: String,
+    bulk_natoms: Int,
+    bulk_xc: String,
+    bulk_nelements: Int,
+    bulk_elements: Seq[String],
+    bulk_e_above_hull: Option[Double],
+    bulk_band_gap: Option[Double],
+    bulk_structure: Structure,
+    slab_millers: Seq[Int],
+    slab_max_miller_index: Int,
+    slab_shift: Double,
+    slab_top: Boolean,
+    slab_natoms: Int,
+    slab_structure: Structure,
+    slab_scores: Seq[Double])
+
+object ScoredSurface {
+  def apply(s: Surface, scores: Seq[Double]): ScoredSurface = ScoredSurface(
+    s.bulk_id, s.bulk_data_source, s.bulk_natoms, s.bulk_xc, s.bulk_nelements,
+    s.bulk_elements, s.bulk_e_above_hull, s.bulk_band_gap, s.bulk_structure,
+    s.slab_millers, s.slab_max_miller_index, s.slab_shift, s.slab_top,
+    s.slab_natoms, s.slab_structure, scores)
+}
+
 /** Per-element nuclearity result (nuclearity.py:39-61): nuclearity is an
   * int rendered as string, or "semi-finite"/"infinite" — the union type
   * forces string encoding (SURVEY §1.3).

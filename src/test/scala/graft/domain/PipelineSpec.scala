@@ -122,6 +122,26 @@ class PipelineSpec extends SparkTestBase {
     assert(mm.getDouble(0) >= -4.0 && mm.getDouble(1) < 2.0)
   }
 
+  test("slab scores never round-trip the structure columns through a UDF") {
+    // both score kinds: best shift by broken bonds, then top-k by density
+    val scfg = cfg.copy(slabFilters = cfg.slabFilters :+ TopKByScore("surface_density", Some(2), None))
+    val r = Pipeline.compile(spark, scfg)
+    val heavy = Set("slab_structure", "bulk_structure")
+    val qe = r.results.queryExecution
+    val udfInputs = Seq(qe.optimizedPlan, qe.sparkPlan).flatMap { plan =>
+      plan.collect { case p => p.expressions }.flatten
+        .flatMap(_.collect { case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u })
+        .flatMap(_.children.flatMap(_.references.map(_.name)))
+    }
+    assert(udfInputs.nonEmpty, "the adslab UDFs should still be in the plan")
+    assert(udfInputs.filter(heavy.contains).isEmpty)
+    r.results.count()
+    assert(r.ledger.await("surf_02_topk"))
+    assert(r.ledger.metrics("surf_02_topk") <= r.ledger.metrics("surf_01_best_shift"))
+    assert(!r.results.columns.contains("slab_scores"))
+    r.close()
+  }
+
   test("filter order is user order: ids filter observed before size filter") {
     val r = Pipeline.compile(spark, cfg)
     r.results.count()
@@ -172,6 +192,24 @@ class MemoCacheSpec extends SparkTestBase {
     computeCount.reset()
     cacheV2.through(in1, "key")(compute).count()
     assert(computeCount.value == 3)
+  }
+
+  test("memo cache: a missing table, or one with no committed file, reads as empty") {
+    val dir = java.nio.file.Files.createTempDirectory("memo")
+    val cache = new MemoCache(spark, dir.toString, "energy", "v1")
+    assert(cache.read().isEmpty)
+    assert(cache.size() == 0L)
+    // what a crashed first append leaves behind
+    java.nio.file.Files.createDirectories(dir.resolve("energy/v=v1/_temporary/0"))
+    assert(cache.read().isEmpty)
+  }
+
+  test("memo cache: a corrupt table fails loudly instead of reading as empty") {
+    val dir = java.nio.file.Files.createTempDirectory("memo")
+    val table = java.nio.file.Files.createDirectories(dir.resolve("energy/v=v1"))
+    java.nio.file.Files.write(table.resolve("part-00000.parquet"), "not parquet".getBytes)
+    val cache = new MemoCache(spark, dir.toString, "energy", "v1")
+    intercept[Exception] { cache.read() }
   }
 }
 
