@@ -15,9 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * co-purchase degree distribution is heavy-tailed, so eagerly allocating
   * `long[k]` per group would spend k·8 bytes on every leaf center the
   * aggregation map holds). Insert is binary-search + arraycopy with an
-  * O(1) reject once full (the common case on hubs); duplicates are kept,
-  * matching [[TopKAggregator.SmallestLongs]] exactly — gt5 feeds distinct
-  * neighbor ids, and the parity spec pins the two implementations equal.
+  * O(1) reject once full (the common case on hubs); duplicates are kept
+  * (gt5 feeds distinct neighbor ids; the sketch queries may not), and
+  * SmallestKAggSpec pins the output to a plain-Scala `sorted.take(k)`.
   */
 final class LongTopK(val k: Int) {
   private var a = new Array[Long](math.min(k, 8))
@@ -55,15 +55,15 @@ final class LongTopK(val k: Int) {
   }
 }
 
-/** Native smallest-k-longs grouped aggregate — the round-11 rewrite of
-  * [[TopKAggregator.SmallestLongs]] (gt5's per-center neighborhood cap)
-  * from a typed Dataset `Aggregator` to a Catalyst
-  * [[TypedImperativeAggregate]].
-  *
-  * Same semantics and the same O(k) per-group state bound, but none of
-  * the typed path's per-row costs: the `groupByKey.mapValues.agg`
-  * spelling pays a DeserializeToObject boundary (whole-stage codegen
-  * breaks), an `ExpressionEncoder[List[Long]]` round-trip of the buffer
+/** Native smallest-k-longs grouped aggregate: the k smallest values per
+  * group, ascending, duplicates kept — gt5's per-center neighborhood cap,
+  * t34's posting head and the KMV minima of sk1, sk2 and sk5. A Catalyst
+  * [[TypedImperativeAggregate]]; the typed Dataset `Aggregator` it
+  * replaced (r8–r10, since deleted) had the same O(k) per-group state
+  * bound but per-row costs this does not: the typed
+  * `groupByKey.mapValues.agg` spelling pays a DeserializeToObject
+  * boundary (whole-stage codegen breaks), an
+  * `ExpressionEncoder[List[Long]]` round-trip of the buffer
   * at every partial-aggregate output row, and a boxed cons-list rebuild
   * (`span` + `:::`) per input value. Here update is
   * `child.eval → long → binary-insert into a primitive array`, merge is

@@ -60,8 +60,8 @@ object Triangles {
     * r11: the boxed `sort_array(collect_list(dst))` became the native
     * [[graft.functions.CollectSortedLongsAgg]] (primitive growable
     * buffer, one sort at final eval) — identical output, measured
-    * 3.5-4.5 s → 1.4 s on the sf1 build (ProfileTriBase, interleaved
-    * A/B); and when the caller pre-partitions `oriented` by src the
+    * 3.5-4.5 s → 1.4 s on the sf1 build (interleaved A/B, PLANS.md
+    * r11); and when the caller pre-partitions `oriented` by src the
     * groupBy rides that partitioning with no exchange at all (0.26 s).
     */
   def adjacency(oriented: DataFrame): DataFrame =

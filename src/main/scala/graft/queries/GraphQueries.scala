@@ -202,7 +202,7 @@ object GraphQueries extends QueryPack {
   // co-partitioned. The repartition replaces the adjacency aggregation's
   // exchange 1:1 on the build side (same m narrow rows shuffled) and
   // deletes exchanges from every enumerate consumer. Measured
-  // (ProfileTriBase sf1, interleaved): adjacency stage 3.5-4.5 s
+  // (sf1, interleaved A/B; PLANS.md r11): adjacency stage 3.5-4.5 s
   // boxed/unpartitioned → 0.26 s native/pre-partitioned. A packed-pairs
   // rewrite of coEdges (collect_set → PackedPairsExpr → distinct on one
   // BIGINT) was measured and REJECTED: 4.5-6.4 s vs 3.2-5.8 s for the
@@ -430,7 +430,7 @@ object GraphQueries extends QueryPack {
       // ADVICE finding); a row_number window caps memory but pays a full
       // sort of the 2|E| symmetric edge list and ships every row (sf1:
       // 56 s → 104 s); the r8–r10 typed Aggregator spelling
-      // (groupByKey + TopKAggregator.SmallestLongs) kept the state bound
+      // (groupByKey.mapValues.agg, since deleted) kept the state bound
       // but paid a DeserializeToObject codegen break plus an
       // ExpressionEncoder List[Long] round-trip per partial output row —
       // the round-10 profile attributed 18.5 s of gt5's 40.3 s sf1 total
@@ -879,7 +879,7 @@ object GraphQueries extends QueryPack {
       // iteration-state rule says materialize (Bfs.reach's frontier
       // trade, not the old sparse register table's: that one was
       // effectively edge-scale and measured WORSE checkpointed —
-      // ProfileGr7Prop, r11).
+      // PLANS.md r11).
       .localCheckpoint()
     r1.unionAll(
         e.join(r1.withColumnRenamed("id", "nbr"), col("dst") === col("nbr"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import graft.Tables
 import graft.ops.{Grouped, Num}
 
@@ -111,24 +112,19 @@ object GroupedQueries extends QueryPack {
         .select("o_custkey", "o_orderkey", "o_totalprice")
         .orderBy("o_custkey", "o_orderkey")),
 
-    // A8 via the custom one-pass Aggregator (map-side combine keeps ≤k
-    // rows per group BEFORE the shuffle — same rows as a8_group_topk,
-    // same oracle, different physical shape; see TopKAggregator).
-    "a8_topk_agg" -> ((s, d) => {
-      import s.implicits._
-      val agg = new graft.functions.TopKAggregator.SmallestK(3)
+    // A8 via Spark's bounded collect_top_k aggregate (map-side combine
+    // keeps ≤k rows per group BEFORE the shuffle — same rows as
+    // a8_group_topk, same oracle, no window sort of every order row).
+    "a8_topk_agg" -> ((s, d) =>
       Tables.orders(s, d)
-        .select(col("o_custkey"), col("o_totalprice"), col("o_orderkey"))
-        .as[(Long, Double, Long)]
-        .groupByKey(_._1)
-        .mapValues(t => graft.functions.TopKAggregator.Entry(t._2, t._3))
-        .agg(agg.toColumn)
-        .toDF("o_custkey", "topk")
+        .groupBy("o_custkey")
+        .agg(ColumnBridge.collectSmallestK(
+          struct(col("o_totalprice").as("score"), col("o_orderkey").as("tie")),
+          3).as("topk"))
         .select(col("o_custkey"), explode(col("topk")).as("e"))
         .select(col("o_custkey"), col("e.tie").as("o_orderkey"),
           col("e.score").as("o_totalprice"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
+        .orderBy("o_custkey", "o_orderkey")),
 
     // A8 top_proportion variant.
     "a8_top_proportion" -> ((s, d) =>

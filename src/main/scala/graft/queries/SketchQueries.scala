@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.StableHash
+import graft.functions.SmallestKLongsAgg.smallestK
 
 /** Cardinality / set-overlap sketches with exact calibration readouts —
   * the distinct-counting tier of the sketch family (hh1/hh2 cover
@@ -186,17 +187,14 @@ object SketchQueries extends QueryPack {
 
     // Bottom-k (KMV) distinct estimator, per day: the k-th smallest of the
     // uniformized user hashes estimates D ≈ (k−1)·|domain|/u_k. The k
-    // minima ride a hard-O(k) TopKAggregator buffer (gt5's SmallestLongs)
-    // — map-side combine ships ≤k values per (day, partition); the
+    // minima ride a hard-O(k) SmallestKLongsAgg buffer (gt5's neighborhood
+    // cap) — map-side combine ships ≤k values per (day, partition); the
     // row_number window spelling would sort every day's rows. Days with
     // fewer than k distinct users have no k-th minimum and drop out (none
     // at sf≥0.01).
     "sk1_bottomk_distinct" -> ((s, d) => {
-      import s.implicits._
       val du = uniformPoints(s, d)
-      val agg = new graft.functions.TopKAggregator.SmallestLongs(K1)
-      val kth = du.as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
-        .agg(agg.toColumn).toDF("day", "bot")
+      val kth = du.groupBy("day").agg(smallestK(col("u"), K1).as("bot"))
         .filter(size(col("bot")) === K1)
         .select(col("day"), element_at(col("bot"), K1).as("uk"))
       val exact = du.groupBy("day").agg(count(lit(1)).as("n_exact"))
@@ -215,10 +213,10 @@ object SketchQueries extends QueryPack {
     // hashes of the UNION form an unbiased sample of it; the fraction
     // also present in both sides estimates J. Flags ride the minima by
     // encoding (u·4 + in_a·2 + in_b) into one long — same order as u, so
-    // SmallestLongs needs no second pass — and every output column is an
-    // integer ppm: the whole query is exact-arithmetic end to end.
+    // the smallest-k aggregate needs no second pass — and every output
+    // column is an integer ppm: the whole query is exact-arithmetic end to
+    // end.
     "sk2_bottomk_jaccard" -> ((s, d) => {
-      import s.implicits._
       val du = uniformPoints(s, d)
       val days = du.select("day").distinct()
       val valid = days.select(col("day").as("p"))
@@ -231,11 +229,8 @@ object SketchQueries extends QueryPack {
         .groupBy("p", "u").agg(max(col("a")).as("a"), max(col("b")).as("b"))
       val exact = uni.groupBy("p").agg(count(lit(1)).as("n_union"),
         sum(col("a") * col("b")).as("n_inter"))
-      val agg = new graft.functions.TopKAggregator.SmallestLongs(K2)
-      val kmv = uni.select(col("p"),
-          (col("u") * 4 + col("a") * 2 + col("b")).as("e"))
-        .as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
-        .agg(agg.toColumn).toDF("p", "bot")
+      val kmv = uni.groupBy("p")
+        .agg(smallestK(col("u") * 4 + col("a") * 2 + col("b"), K2).as("bot"))
         .select(col("p"), size(col("bot")).cast("bigint").as("k_used"),
           expr("CAST(size(filter(bot, x -> x % 4 = 3)) AS BIGINT)")
             .as("both_in_k"))
@@ -391,7 +386,6 @@ object SketchQueries extends QueryPack {
     // with an incomplete sample (< k union hashes) drop out, and a zero
     // exact count yields a NULL err_ppm rather than a divide.
     "sk5_bottomk_new_users" -> ((s, d) => {
-      import s.implicits._
       val du = uniformPoints(s, d)
       val days = du.select("day").distinct()
       val valid = days.select(col("day").as("p"))
@@ -405,11 +399,8 @@ object SketchQueries extends QueryPack {
       val exact = uni.groupBy("p").agg(
         sum(when(col("a") === 0 && col("b") === 1, 1L).otherwise(0L))
           .as("n_new_exact"))
-      val agg = new graft.functions.TopKAggregator.SmallestLongs(K2)
-      val kmv = uni.select(col("p"),
-          (col("u") * 4 + col("a") * 2 + col("b")).as("e"))
-        .as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
-        .agg(agg.toColumn).toDF("p", "bot")
+      val kmv = uni.groupBy("p")
+        .agg(smallestK(col("u") * 4 + col("a") * 2 + col("b"), K2).as("bot"))
         .filter(size(col("bot")) === K2)
         .select(col("p"),
           expr(s"element_at(bot, $K2) div 4").as("uk"),

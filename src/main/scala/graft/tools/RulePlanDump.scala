@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.plans.RangeJoinBinningRule
 
-/** Plan evidence for RangeJoinBinningRule (PLANS.md): the same
-  * declarative range join, with the rule off (nested loop) and on
-  * (binned equi-join).
+/** Plan evidence for RangeJoinBinningRule (PLANS.md): the AQE-final plan
+  * of the same declarative range join, with the rule off (nested loop)
+  * and on (binned equi-join).
   */
 object RulePlanDump {
   def main(args: Array[String]): Unit = {
@@ -25,7 +25,9 @@ object RulePlanDump {
         case None    => spark.conf.unset(RangeJoinBinningRule.ConfKey)
       }
       val j = p.join(iv, cond)
-      j.write.format("noop").mode("overwrite").save()
+      // collect(), not a noop write: the write runs a NEW QueryExecution
+      // and leaves j's own adaptive plan at isFinalPlan=false
+      j.collect()
       println(s"\n===== $label =====")
       println(j.queryExecution.executedPlan.toString)
     }

@@ -3,8 +3,8 @@ package graft.functions
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
-/** Pins the round-11 native [[SmallestKLongsAgg]] (TypedImperativeAggregate)
-  * to the r8–r10 typed Aggregator reference it replaced in gt5 — same
+/** Pins the native [[SmallestKLongsAgg]] (TypedImperativeAggregate) to a
+  * plain-Scala reference — per group, the values `sorted.take(K)`: same
   * values, same order, same cap — across hub groups (≫ k values),
   * duplicates, and singleton groups, through a real partial/final plan
   * (repartition forces merge + buffer serialization).
@@ -14,7 +14,7 @@ class SmallestKAggSpec extends SparkTestBase {
 
   private val K = 64
 
-  test("native smallest-k equals the typed SmallestLongs reference " +
+  test("native smallest-k equals the in-memory sorted.take(k) reference " +
     "(hubs, duplicates, singletons) and runs hash-aggregated") {
     val rnd = new scala.util.Random(7)
     val rows = (1 to 20000).map { _ =>
@@ -24,14 +24,10 @@ class SmallestKAggSpec extends SparkTestBase {
 
     val native = df.groupBy("c")
       .agg(SmallestKLongsAgg.smallestK(col("n"), K).as("ns"))
-    // the typed reference (kept in-tree exactly as this pin's oracle)
-    val typed = {
-      val agg = new TopKAggregator.SmallestLongs(K)
-      df.as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
-        .agg(agg.toColumn).toDF("c", "ns")
-    }
+    // the reference: the same rows grouped in memory
+    val ref = rows.groupBy(_._1).view
+      .mapValues(_.map(_._2).sorted.take(K)).toMap
     val got = native.as[(Long, Seq[Long])].collect().toMap
-    val ref = typed.as[(Long, Seq[Long])].collect().toMap
     assert(got.keySet == ref.keySet)
     got.keys.foreach { c =>
       assert(got(c) == ref(c), s"group $c: ${got(c)} vs ${ref(c)}")

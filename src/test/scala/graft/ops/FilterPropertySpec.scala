@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkTestBase
 
@@ -81,19 +82,30 @@ class FilterPropertySpec extends SparkTestBase {
   }
 
   test("A8/A9 bounds: top-k never exceeds k per group; A9 keeps the argmin") {
-    val genRows = Gen.listOfN(50, Gen.zip(Gen.choose(0, 4), Gen.choose(0.0, 10.0)))
+    // a handful of score values, so top-k boundaries fall inside ties
+    val genRows = Gen.listOfN(50,
+      Gen.zip(Gen.choose(0, 4), Gen.oneOf(0.5, 1.0, 2.5, 4.0, 9.5)))
     val prop = Prop.forAll(genRows) { rows =>
       val df = rows.zipWithIndex.map { case ((g, v), i) => (g, v, i) }
         .toDF("g", "v", "i").cache()
       val topk = Grouped.groupTopK(df, Seq("g"), col("v"), Seq(col("i")), 2)
       val sizesOk = topk.groupBy("g").count().as[(Int, Long)].collect()
         .forall(_._2 <= 2)
+      // a8_topk_agg's spelling: bounded collect_top_k over (score, tie)
+      val collected = df.groupBy("g")
+        .agg(ColumnBridge.collectSmallestK(
+          struct(col("v").as("score"), col("i").as("tie")), 2).as("t"))
+        .select(col("g"), explode(col("t")).as("e"))
+        .select(col("g"), col("e.score"), col("e.tie"))
+        .as[(Int, Double, Int)].collect().toSet
+      val sameRows = collected ==
+        topk.select("g", "v", "i").as[(Int, Double, Int)].collect().toSet
       val a9 = Grouped.withinThresholdOfMin(df, Seq("g"), col("v"), 0.1)
       // every group's minimum row always survives A9
       val minIds = rows.zipWithIndex.groupBy(_._1._1).values.map(_.minBy(r => (r._1._2, r._2))._2).toSet
       val keptIds = a9.select("i").as[Int].collect().toSet
       df.unpersist()
-      sizesOk && minIds.subsetOf(keptIds)
+      sizesOk && sameRows && minIds.subsetOf(keptIds)
     }
     assert(SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(15), prop).passed)
   }

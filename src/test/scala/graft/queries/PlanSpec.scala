@@ -574,19 +574,28 @@ class PlanSpec extends SparkTestBase {
       !p.contains("BroadcastNestedLoop"))
   }
 
-  test("sk1 bottom-k: the minima ride the O(k)-buffer typed aggregate — " +
+  /** The bounded top-k family (SmallestKLongsAgg, collect_top_k) runs as
+    * an untyped object hash aggregate: no typed groupByKey's AppendColumns.
+    */
+  private def assertNativeTopK(p: String): Unit = {
+    assert(p.contains("ObjectHashAggregate"), p.linesIterator.take(8).mkString("\n"))
+    assert(!p.contains("AppendColumns"),
+      p.linesIterator.filter(_.contains("AppendColumns")).mkString("\n"))
+  }
+
+  test("sk1 bottom-k: the minima ride the native O(k)-buffer aggregate — " +
     "no row_number window, no per-day sort of the event rows") {
     val p = plan("sk1_bottomk_distinct")
-    assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate"),
-      p.linesIterator.take(8).mkString("\n")) // the typed Aggregator path
+    assertNativeTopK(p)
     assert(!p.contains("Window"),
       p.linesIterator.filter(_.contains("Window")).mkString("\n"))
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoop"))
   }
 
   test("sk2 KMV jaccard: union flags fold in ONE (p,u)-keyed aggregate; " +
-    "minima bounded by the typed aggregate; no window, no cartesian") {
+    "minima bounded by the native aggregate; no window, no cartesian") {
     val p = plan("sk2_bottomk_jaccard")
+    assertNativeTopK(p)
     assert(!p.contains("Window") && !p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoop"), p.linesIterator.take(8).mkString("\n"))
   }
@@ -668,11 +677,20 @@ class PlanSpec extends SparkTestBase {
       !p.contains("BroadcastNestedLoop"))
   }
 
-  test("sk5 new-users: minima ride the O(k) typed aggregate (no window " +
+  test("sk5 new-users: minima ride the native O(k) aggregate (no window " +
     "sort of the union), no cartesian") {
     val p = plan("sk5_bottomk_new_users")
+    assertNativeTopK(p)
     assert(!p.contains("Window") && !p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoop"), p.linesIterator.take(8).mkString("\n"))
+  }
+
+  test("a8 top-k aggregate: bounded collect_top_k per customer — no " +
+    "window sort of the order rows, no typed AppendColumns") {
+    val p = plan("a8_topk_agg")
+    assertNativeTopK(p)
+    assert(!p.contains("Window"),
+      p.linesIterator.filter(_.contains("Window")).mkString("\n"))
   }
 
   test("t30 confusion matrix: row totals broadcast back onto the bounded " +
