@@ -434,8 +434,7 @@ object Dedup {
     * label map with itself (pointer jumping: component ← label(component)),
     * which doubles the reach per round → O(log diameter) convergence, so a
     * long near-dup chain (common in shingle dedup) cannot exhaust maxIter;
-    * `localCheckpoint` truncates the growing lineage each round
-    * (the standard iterative-algorithm discipline on Spark).
+    * [[Blocks.iterate]] checkpoints each round, truncating the lineage.
     *
     * Output: (id, component) for EVERY node in `nodes` — component = the
     * minimum id reachable, so singletons map to themselves and each dup
@@ -443,11 +442,6 @@ object Dedup {
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame, idCol: String,
                           src: String, dst: String, maxIter: Int = 30): DataFrame = {
-    // checkpoint lifecycle ([[Blocks]]): a long-running session (Bench
-    // runs 100+ queries in one JVM) would accumulate every round's blocks
-    // and degrade under memory pressure — free superseded ones; only the
-    // FINAL (edge-touched-nodes-sized) label table stays cached for the
-    // caller's lazy join.
     // edges referencing ids outside `nodes` are dropped up front (two
     // one-time semi-joins): otherwise an out-of-nodes endpoint could
     // become a component label or transitively merge in-node components
@@ -456,7 +450,7 @@ object Dedup {
     // two selects over the same unmaterialized plan evaluates the (often
     // expensive — LSH candidate generation) edge plan twice before the
     // checkpoint; the explode emits both directions from one pass
-    val sym = edges
+    val symPlan = edges
       .select(explode(array(
         struct(col(src).as("a"), col(dst).as("b")),
         struct(col(dst).as("a"), col(src).as("b")))).as("e"))
@@ -466,30 +460,20 @@ object Dedup {
       // (measured: pre-partitioning sym on the probe key before the
       // checkpoint does NOT pay off here — AQE re-plans the per-round
       // joins anyway and the extra up-front exchange is pure cost)
-      .localCheckpoint()
-    // severStats on EVERY checkpoint in this loop: the carried origin
-    // stats multiply through the per-round joins (bit-length compounding
-    // per round) until driver planning drowns in BigInteger arithmetic —
-    // the sf10-caught failure documented at GraftSqlBridge.severStats
-    val symS = org.apache.spark.sql.GraftSqlBridge.severStats(sym)
-    // iterate ONLY over nodes that touch an edge: everything else is its
-    // own singleton component and never changes — at dedup scale that is
-    // the overwhelming majority of the corpus, so the loop tables shrink
-    // from |nodes| to |dup-cluster members|. Seeding with the first hop
-    // (component = min(id, direct neighbors)) also saves one full round.
-    var labels = org.apache.spark.sql.GraftSqlBridge.severStats(
-      symS.groupBy(col("a"))
+    val labels = Blocks.using(symPlan) { sym =>
+      // iterate ONLY over nodes that touch an edge: everything else is its
+      // own singleton component and never changes — at dedup scale that is
+      // the overwhelming majority of the corpus, so the loop tables shrink
+      // from |nodes| to |dup-cluster members|. Seeding with the first hop
+      // (component = min(id, direct neighbors)) also saves one full round.
+      val seed = sym.groupBy(col("a"))
         .agg(min(col("b")).as("mb"))
         .select(col("a").as("id"), least(col("a"), col("mb")).as("component"))
-        .localCheckpoint())
-    var iter = 0
-    var done = false
-    // exception safety: a mid-loop failure (task error, non-convergence)
-    // must not strand the accumulated blocks in a long-lived session —
-    // free the live label table on ANY abnormal exit, sym on every exit
-    try {
-      while (!done && iter < maxIter) {
-        val nbrMin = symS
+      // converged: no label moved (the `__old` column carried below)
+      val stable = (next: DataFrame) =>
+        next.filter(col("component") < col("__old")).isEmpty
+      Blocks.iterate(seed, maxIter, Some(stable)) { labels =>
+        val nbrMin = sym
           .join(labels.select(col("id").as("b"), col("component").as("nc")), Seq("b"))
           .groupBy(col("a")).agg(min(col("nc")).as("min_nbr"))
           .withColumnRenamed("a", "id")
@@ -505,28 +489,13 @@ object Dedup {
         // Every label is itself a node id whose own label is connected to it,
         // so the composed label stays within the component; reach r+1 (hook)
         // composed with reach r (labels) ≈ doubles per round → O(log d).
-        val next = hooked.join(
+        hooked.join(
             labels.select(col("id").as("component"), col("component").as("__jump")),
             Seq("component"), "left")
           .select(col("id"), col("__old"),
             coalesce(col("__jump"), col("component")).as("component"))
-          .localCheckpoint()
-        val nextS = org.apache.spark.sql.GraftSqlBridge.severStats(next)
-        // convergence check as a direct scan of the just-materialized
-        // checkpoint blocks — a milliseconds job. The previous form rode
-        // the materialization as an observe() metric, but Observation.get
-        // waits on the listener BUS, and in a long session (Bench: 100+
-        // queries of task events) bus backlog turned that wait into
-        // multi-second stalls (measured: d8 5.5s → 20.6s outliers)
-        done = nextS.filter(col("component") < col("__old")).isEmpty
-        Blocks.unpersist(labels) // superseded by `next`
-        labels = nextS.drop("__old")
-        iter += 1
       }
-      require(done, s"connectedComponents did not converge in $maxIter rounds")
-    } catch {
-      case t: Throwable => Blocks.unpersist(labels); throw t
-    } finally Blocks.unpersist(sym) // only used inside the loop
+    }
     // edgeless nodes re-enter as their own component
     nodes.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")

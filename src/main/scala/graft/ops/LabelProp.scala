@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Synchronous label propagation (community detection) — the fourth member
@@ -29,10 +28,10 @@ object LabelProp {
     * the (a, lbl) count's clustering (subset rule) AND the packed-max
     * argmax's, so both aggregates ride the same layout.
     *
-    * Lifecycle (CC discipline, not gr1's bounded-by-GC): the final label
-    * table is eagerly localCheckpoint'ed (it is O(|V|) — small) and the
-    * O(|E|) edge cache is released INSIDE the call. The first sf1 bench
-    * that carried gr2's lingering edge cache into the triangle family
+    * Lifecycle ([[Blocks.checkpointThenRelease]]): the O(|V|) label table
+    * is eagerly checkpointed and the O(|E|) edge cache released INSIDE
+    * the call. The first sf1 bench that carried gr2's lingering edge
+    * cache into the triangle family
     * measured gt2 at 5-6× its usual time: a big persist that waits for GC
     * is a real memory tax on whatever runs next in the session.
     */
@@ -63,25 +62,23 @@ object LabelProp {
       // winner, same tie to the smallest label — and both aggregates are
       // primitive-buffer HashAggregates riding the ONE repartition(a)
       // exchange (hashpartitioning(a) satisfies both clusterings), so the
-      // round's tail is sort-free. Bounds: n ≤ degree < 2^31 and labels
-      // are node ids < 2^31 (the gt5 packed-pair id bound — node ids stay
-      // < 2^30 through PB-scale corpora), so the pack stays under 2^62.
+      // round's tail is sort-free. Bounds: n ≤ degree < 2^31; a label
+      // outside [0, 2^31) would decode wrong (2^31+5 as 5), so it raises.
+      val lbl = when(col("lbl").between(0L, 2147483647L), col("lbl"))
+        .otherwise(raise_error(lit(
+          "LabelProp.propagate: node ids must lie in [0, 2^31) for the packed argmax")))
       labels = e.join(labels, col("b") === col("id"))
         .select(col("a"), col("lbl"))
         .repartition(col("a"))
         .groupBy(col("a"), col("lbl")).agg(count(lit(1)).as("n"))
         .groupBy(col("a"))
         .agg(max(col("n") * lit(2147483648L) +
-          (lit(2147483647L) - col("lbl"))).as("__packed"))
+          (lit(2147483647L) - lbl)).as("__packed"))
         .select(col("a").as("id"),
           (lit(2147483647L) - pmod(col("__packed"), lit(2147483648L)))
             .as("lbl"))
     }
-    // sever lineage off the edge cache; release the cache even when the
-    // eager checkpoint job fails — an exception here would otherwise pin
-    // the O(|E|) blocks for the rest of the session (Bench catches per
-    // query and keeps going)
-    try labels.localCheckpoint(true)
-    finally e.unpersist()
+    // sever lineage off the edge cache, released even if the job fails
+    Blocks.checkpointThenRelease(labels)(e.unpersist())
   }
 }

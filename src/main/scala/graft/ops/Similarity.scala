@@ -360,33 +360,22 @@ object Similarity {
   /** Full k-means training: `iters` Lloyd rounds, each round's means fed
     * back as the next centroid set (rebuilt into array form by a sorted
     * collect over the tiny C×dim frame). The loop is a driver-side fold
-    * over CENTROID frames — dim-sized, localCheckpoint'd — never over the
-    * corpus; per round the corpus sees one broadcast + one narrow pass +
-    * one small-domain shuffle. Empty clusters drop out (their centroid
+    * over CENTROID frames ([[Blocks.iterate]]), never over the corpus;
+    * per round the corpus sees one broadcast + one narrow pass + one
+    * small-domain shuffle. Empty clusters drop out (their centroid
     * simply has no assigned rows), the standard Lloyd behavior.
     */
   def kmeansTrain(emb: DataFrame, id: String, vec: String,
                   seedPred: Column, iters: Int): DataFrame = {
-    var cent = emb.filter(seedPred)
+    val seed = emb.filter(seedPred)
       .select(col(id).as("cid"),
         transform(col(vec), x => x.cast("double")).as("cv"))
-      .localCheckpoint()
-    try {
-      for (_ <- 0 until iters) {
-        val flat = kmeansStepFrom(emb, id, vec, cent)
-        val next = flat.groupBy("cid")
-          .agg(transform(
-            array_sort(collect_list(struct(col("pos"), col("mean_v")))),
-            x => x.getField("mean_v")).as("cv"))
-          .localCheckpoint()
-        Blocks.unpersist(cent) // superseded once `next` is materialized
-        cent = next
-      }
-    } catch {
-      // a mid-training failure must not strand the live centroid blocks
-      case t: Throwable => Blocks.unpersist(cent); throw t
+    Blocks.iterate(seed, iters) { cent =>
+      kmeansStepFrom(emb, id, vec, cent).groupBy("cid")
+        .agg(transform(
+          array_sort(collect_list(struct(col("pos"), col("mean_v")))),
+          x => x.getField("mean_v")).as("cv"))
     }
-    cent
   }
 
   /** Near-duplicate pairs at scale: candidate generation by LSH-bucket

@@ -128,9 +128,9 @@ object GraphQueries extends QueryPack {
       val ed = e.join(deg, "src").persist() // co-partitioned: no exchange
       val nodes = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct().persist()
-      GraphBase(e, ed, nodes,
-        e.localCheckpoint(false), ed.localCheckpoint(false),
-        nodes.localCheckpoint(false))
+      GraphBase(e, ed, nodes, graft.ops.Blocks.checkpoint(e, eager = false),
+        graft.ops.Blocks.checkpoint(ed, eager = false),
+        graft.ops.Blocks.checkpoint(nodes, eager = false))
     },
     release = gb => {
       graft.ops.Blocks.unpersist(gb.eSev)
@@ -220,7 +220,7 @@ object GraphQueries extends QueryPack {
         .persist()
       val adj = graft.ops.Triangles.adjacency(oriented)
         .persist()
-      TriBase(oriented, adj, oriented.localCheckpoint(eager = false))
+      TriBase(oriented, adj, graft.ops.Blocks.checkpoint(oriented, eager = false))
     },
     release = tb => {
       graft.ops.Blocks.unpersist(tb.orientedSevered)
@@ -274,10 +274,9 @@ object GraphQueries extends QueryPack {
   private val triCountsCache = new graft.ops.SharedBase[DataFrame](
     name = "tri_counts",
     build = (s, d) => {
-      triangles(s, d)
+      graft.ops.Blocks.checkpoint(triangles(s, d)
         .select(explode(array(col("a"), col("b"), col("c"))).as("part"))
-        .groupBy("part").agg(count(lit(1)).as("n_tri"))
-        .localCheckpoint(eager = false)
+        .groupBy("part").agg(count(lit(1)).as("n_tri")), eager = false)
     },
     release = df => graft.ops.Blocks.unpersist(df),
     materialize = df => { df.count(); () })
@@ -530,7 +529,7 @@ object GraphQueries extends QueryPack {
     // set is orders below that (decimal is the fallback if one ever
     // isn't). Same scale contract as gr1: edges shuffled once (by src,
     // persisted), each unrolled round reshuffles only the O(|V|) mass
-    // table, |E|-scale caches freed behind the eager O(|V|) checkpoint.
+    // table; the result returns lazily over the shared family base.
     // Seeds: deterministic id residue (node id % 50 = 0).
     "gr8_personalized_pagerank" -> ((s, d) => {
       // shared family base (gr1's r11 note): ed/nodes are session-cached
@@ -589,8 +588,8 @@ object GraphQueries extends QueryPack {
     // deployments. Component = min reachable node id; the DuckDB oracle
     // computes it as a recursive transitive closure (safe at gate scale
     // BECAUSE the subgraph is small; the Spark side never materializes
-    // closures). Lifecycle: result is O(touched nodes) — eagerly severed,
-    // CC's internal label cache released inside the call (gr1 discipline).
+    // closures). Lifecycle: the O(touched nodes) result is checkpointed
+    // and CC's label table released inside the call (Blocks helper).
     "gr3_components" -> ((s, d) => {
       val e = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT")
@@ -605,10 +604,8 @@ object GraphQueries extends QueryPack {
       val nodes = e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id"))).distinct()
       val cc = graft.ops.Dedup.connectedComponents(nodes, e, "id", "src", "dst")
-      val out =
-        try cc.localCheckpoint(true)
-        finally graft.ops.Blocks.unpersist(cc)
-      out.select(col("id").as("node_id"), col("component"))
+      graft.ops.Blocks.checkpointThenRelease(cc)(graft.ops.Blocks.unpersist(cc))
+        .select(col("id").as("node_id"), col("component"))
         .orderBy("node_id")
     }),
 
@@ -618,10 +615,10 @@ object GraphQueries extends QueryPack {
     // purchase graph (cust→supp, supp→cust only on returned lines)?
     // Emits (node, min hops ≤ 3) via [[graft.ops.Bfs.reach]] — see there
     // for the per-round join shape and the unhinted node-scale-frame
-    // discipline (GraphPlanSpec pins the no-broadcast tier). Deployment
-    // lifecycle here: edges shuffle once (persisted, src-partitioned) for
-    // all three rounds and are released inside the call behind an eager
-    // checkpoint of the O(reached) result (gr1 discipline).
+    // discipline (GraphPlanSpec pins the no-broadcast tier). Edges come
+    // from the shared family base, which owns their blocks; gr4b is the
+    // form that checkpoints the O(reached) result and releases its own
+    // edge cache inside the call.
     "gr4_bfs_hops" -> ((s, d) => {
       // shared family base: edges stay src-partitioned for every round's
       // frontier semi-join; nodes no longer recomputed per call (r11)
@@ -824,10 +821,10 @@ object GraphQueries extends QueryPack {
         .select((col("c_custkey") * 2).as("id"))
         .join(nodes, Seq("id"), "left_semi")
       val visited = graft.ops.Bfs.reach(e, seeds, 3)
-      val out =
-        try visited.localCheckpoint(true)
-        finally { e.unpersist(); nodes.unpersist() }
-      out.select(col("id").as("node_id"), col("hops").cast("int").as("hops"))
+      graft.ops.Blocks.checkpointThenRelease(visited) {
+          e.unpersist(); nodes.unpersist()
+        }
+        .select(col("id").as("node_id"), col("hops").cast("int").as("hops"))
         .orderBy("node_id")
     }),
   )
@@ -869,18 +866,17 @@ object GraphQueries extends QueryPack {
     // unchanged.
     val r0 = nodes.select(col("id"),
       Hll.regCol(h).as("reg"), Hll.rhoCol(h).cast("int").as("rho"))
-    val r1 = r0.unionAll(
+    // round 1 feeds round 2 TWICE (union arm + edge join). The packed
+    // table is |V| rows × (8 + M) bytes — NODE-scale — so the
+    // iteration-state rule says materialize (Bfs.reach's frontier
+    // trade, not the old sparse register table's: that one was
+    // effectively edge-scale and measured WORSE checkpointed —
+    // PLANS.md r11).
+    val r1 = graft.ops.Blocks.checkpoint(r0.unionAll(
         e.join(r0.withColumnRenamed("id", "nbr"), col("dst") === col("nbr"))
           .select(col("src").as("id"), col("reg"), col("rho")))
       .groupBy("id")
-      .agg(HllRegs.initRegs(col("reg"), col("rho")).as("regs"))
-      // round 1 feeds round 2 TWICE (union arm + edge join). The packed
-      // table is |V| rows × (8 + M) bytes — NODE-scale — so the
-      // iteration-state rule says materialize (Bfs.reach's frontier
-      // trade, not the old sparse register table's: that one was
-      // effectively edge-scale and measured WORSE checkpointed —
-      // PLANS.md r11).
-      .localCheckpoint()
+      .agg(HllRegs.initRegs(col("reg"), col("rho")).as("regs")))
     r1.unionAll(
         e.join(r1.withColumnRenamed("id", "nbr"), col("dst") === col("nbr"))
           .select(col("src").as("id"), col("regs")))

@@ -66,8 +66,8 @@ object MiningQueries extends QueryPack {
     "mb1_assoc_rules" -> ((s, d) => {
       // the distinct basket-item table feeds FOUR consumers (both pair
       // sides, item supports, corpus total) — persist it so the fact is
-      // scanned and dedup-shuffled once, then eager-checkpoint the tiny
-      // rule table and free the blocks inside the call (gr1's discipline)
+      // scanned and dedup-shuffled once, then checkpoint the tiny rule
+      // table and free it inside the call (Blocks.checkpointThenRelease)
       val items = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct().persist()
@@ -94,10 +94,8 @@ object MiningQueries extends QueryPack {
           expr("""CAST((CAST(1000000 AS DECIMAL(38,0)) * n_ab * n_orders)
                   div (CAST(n_a AS DECIMAL(38,0)) * n_b) AS BIGINT)""")
             .as("lift_ppm"))
-      val out =
-        try rules.localCheckpoint(true)
-        finally items.unpersist()
-      out.orderBy("p_a", "p_b")
+      graft.ops.Blocks.checkpointThenRelease(rules)(items.unpersist())
+        .orderBy("p_a", "p_b")
     }),
 
     // Zone-map (min/max-per-file) scan-pruning advisor: for the probe

@@ -136,7 +136,8 @@ object StreamOps {
     * table on the key (drop superseded rows), union the fresh ones,
     * rewrite. The merged frame is eagerly checkpointed BEFORE the
     * overwrite — the plan reads the same path it is about to replace, and
-    * parquet reads are lazy. Rewrite-the-table is exact for a
+    * parquet reads are lazy — and freed after it, so a long-running stream
+    * holds no per-batch copy of the view. Rewrite-the-table is exact for a
     * dashboard-sized view; at lake scale the same merge targets only
     * touched partitions (partitionBy(win_start) + dynamic partition
     * overwrite) or a MERGE-capable table format.
@@ -161,8 +162,8 @@ object StreamOps {
           catch { case _: org.apache.spark.sql.AnalysisException => None }
         val merged = existing
           .fold(batch)(e => e.join(batch, keys, "left_anti").unionByName(batch))
-          .localCheckpoint(true) // sever from the path we overwrite next
-        merged.write.mode("overwrite").parquet(path)
+        // the checkpoint severs the plan from the path we overwrite
+        graft.ops.Blocks.using(merged)(_.write.mode("overwrite").parquet(path))
       }
       .start()
   }

@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.{SparkEntry, SparkTestBase}
 
@@ -130,10 +131,10 @@ class BlocksSpec extends SparkTestBase {
     runOnce() // absorb first-call session effects
     val base = persistIds
     runOnce(); runOnce()
-    // the edge/deg/node persists are unpersisted eagerly (CC/LPA
-    // discipline); each invocation leaves only its O(|V|) checkpointed
-    // mass table, which the weak-valued registry drops under GC once the
-    // plan is dereferenced
+    // the |E|-scale edge/deg/node caches live in the session-shared family
+    // base, built once by the first call; each invocation returns lazily
+    // over it, so whatever a rerun leaves (its O(|V|) mass checkpoint) must
+    // leave the weak-valued registry under GC once the plan is dereferenced
     var tries = 0
     while ((persistIds -- base).nonEmpty && tries < 40) {
       System.gc(); Thread.sleep(250); tries += 1
@@ -141,5 +142,51 @@ class BlocksSpec extends SparkTestBase {
     val grown = persistIds -- base
     assert(grown.isEmpty,
       s"pagerank reruns grew the persistent-RDD registry: +${grown.size} (ids $grown)")
+  }
+
+  test("result-checkpoint queries: repeated gr3/gr4b/mb1 invocations " +
+    "leave no persistent-RDD growth after GC") {
+    // gr3, gr4b and mb1 checkpoint their small result and release the
+    // frames that built it inside the call (Blocks.checkpointThenRelease);
+    // the result checkpoint must leave the weak-valued registry under GC
+    // once the plan is dereferenced. gr1 and gr2 have their own cases above.
+    for (name <- Seq("gr3_components", "gr4b_bfs_hops_persisted",
+        "mb1_assoc_rules")) {
+      def runOnce(): Unit =
+        assert(SparkEntry.queries(name)(spark, sf).count() > 0, name)
+      runOnce() // absorb first-call session effects (shared bases)
+      val base = persistIds
+      runOnce(); runOnce()
+      var tries = 0
+      while ((persistIds -- base).nonEmpty && tries < 40) {
+        System.gc(); Thread.sleep(250); tries += 1
+      }
+      val grown = persistIds -- base
+      assert(grown.isEmpty,
+        s"$name reruns grew the persistent-RDD registry: +${grown.size} (ids $grown)")
+    }
+  }
+
+  test("iterate: a loop that fails in round 2 frees every block it made " +
+    "(driver-side throw and failed checkpoint job alike)") {
+    import spark.implicits._
+    val init = (1L to 20L).toDF("x")
+    def failInRound2(fail: DataFrame => DataFrame): Unit = {
+      var round = 0
+      val before = persistIds
+      intercept[Exception] {
+        Blocks.iterate(init, maxRounds = 5) { live =>
+          round += 1
+          val next = live.select((col("x") + 1).as("x"))
+          if (round == 2) fail(next) else next
+        }
+      }
+      assert(round == 2)
+      assert(persistIds == before,
+        s"a failed loop changed the persistent-RDD registry: " +
+          s"+${persistIds -- before}, -${before -- persistIds}")
+    }
+    failInRound2(_ => throw new IllegalStateException("step fails"))
+    failInRound2(_.select(raise_error(lit("round-2 job fails")).as("x")))
   }
 }

@@ -46,4 +46,19 @@ class LabelPropSpec extends SparkTestBase {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
     assert(res.passed, res.status.toString)
   }
+
+  test("ids outside [0, 2^31) make the packed argmax raise, not decode " +
+    "a label that is no node id") {
+    // the pack n·2^31 + (2^31−1−lbl) keeps only the low 31 bits of a
+    // label: 2^31+5 would decode as 5. A triangle of large ids plus an
+    // edge to a negative id covers both sides of the range.
+    val big = 2147483648L
+    val es = Seq((big + 1, big + 2), (big + 2, big + 3), (big + 1, big + 3),
+      (big + 3, -7L))
+    val sym = es.flatMap { case (a, b) => Seq((a, b), (b, a)) }.toDF("a", "b")
+    val err = intercept[Exception] {
+      LabelProp.propagate(sym, 3).collect()
+    }
+    assert(err.getMessage.contains("must lie in [0, 2^31)"), err.getMessage)
+  }
 }

@@ -255,6 +255,10 @@ class StreamingSpec extends SparkTestBase {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[StreamOps.Evt]
     val dir = java.nio.file.Files.createTempDirectory("graft-matview").toString
+    // each batch checkpoints the merged view; its blocks must be freed
+    // once the overwrite lands, not left for GC (checked before any GC)
+    def persistIds = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persistIds
     val q = StreamOps.startCountsMatView(ms.toDF(), s"$dir/view", s"$dir/ckpt")
     try {
       val all = Seq(
@@ -266,6 +270,8 @@ class StreamingSpec extends SparkTestBase {
         StreamOps.Evt(5, ts(90), 1, "click", 1.0))
       ms.addData(all.take(3): _*); q.processAllAvailable()
       ms.addData(all.drop(3): _*); q.processAllAvailable()
+      val grown = persistIds -- before
+      assert(grown.isEmpty, s"mat-view batches left checkpoints cached: $grown")
       val got = spark.read.parquet(s"$dir/view")
         .select("win_start", "event_type", "n")
         .collect().map(r => (r.getTimestamp(0), r.getString(1), r.getLong(2))).toSet
