@@ -6,10 +6,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     // optional 3rd arg (local iteration only — the driver passes two): a
-    // comma-separated id list restricting the dump + manifest to a subset
+    // comma-separated id list restricting the dump + manifest to a subset;
+    // an unknown id fails here, before an empty manifest could compare
+    // as ALL MATCH over zero queries
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.toSeq.flatten.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not in the registry: ${unknown.sorted.mkString(", ")}")
     def selected(name: String): Boolean = only.forall(_.contains(name))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()

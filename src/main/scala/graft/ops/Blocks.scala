@@ -34,7 +34,7 @@ private[graft] object Blocks {
     val found = rdds(df)
     require(found.size <= 1,
       s"Blocks.unpersist expects a checkpoint root; found ${found.size} checkpointed inputs")
-    found.foreach(_.unpersist(blocking = false))
+    found.foreach(GraftSqlBridge.unpersistRDD)
   }
 
   private def rdds(df: DataFrame) =

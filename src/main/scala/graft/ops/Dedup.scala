@@ -22,6 +22,12 @@ import graft.functions.StableHash
   * canonical web-scale dedup (the banding threshold tunes recall); tier 4
   * is reserved for candidate verification, exactly like production
   * pipelines verify LSH candidates with true Jaccard.
+  *
+  * Both halves of the fan-out-then-join shape live here once:
+  * [[explodeRows]] is the one guarded explode (shingle postings, gram
+  * rows, band rows), and [[bandJoin]] is the one (band, key) self-join
+  * behind every banded tier (MinHash [[lshBandPairs]], [[simhashBandPairs]],
+  * [[simhash64BandPairs]]).
   */
 object Dedup {
 
@@ -109,30 +115,61 @@ object Dedup {
         col("__mh").getItem(i).as(s"sig$i")): _*)
   }
 
-  /** LSH candidate pairs: band the signature, hash each band, self-join on
-    * (band, key). `bands`·`rows` must equal the signature width.
+  /** One row per element of `arr`, next to `keep`, as column `as`.
+    *
+    * Spelled `explode_outer` + `as IS NOT NULL`, deliberately: on a plain
+    * explode of an array ATTRIBUTE, InferFiltersFromGenerate adds
+    * `size(arr) > 0 AND isnotnull(arr)` and pushes it below every
+    * projection by alias substitution — the whole tokens → shingles →
+    * hashes chain ends up inlined in a Filter under the scan (beneath
+    * `parallelize`'s round-robin exchange, on the one scan task) and runs
+    * again above it (measured ~14× slower in ngramJaccard, ~4× in d25).
+    * explode_outer infers no filter; its null rows (empty or null arrays,
+    * null elements) drop through a cheap test on the generated attribute,
+    * which cannot be pushed below the Generate.
+    */
+  def explodeRows(df: DataFrame, keep: Seq[Column], arr: Column,
+                  as: String): DataFrame =
+    df.select(keep :+ explode_outer(arr).as(as): _*).filter(col(as).isNotNull)
+
+  /** The band self-join behind every banded tier: explode each row's
+    * per-band keys (band index = position in `keys`) through
+    * [[explodeRows]], self-join on (band, key) and keep `id1 < id2`. Each
+    * `payload` column `c` rides both sides as `c1` and `c2`, so the
+    * caller's verify reads them without a join back. The output is one
+    * row per shared band: callers verify, then `distinct`.
+    */
+  def bandJoin(rows: DataFrame, id: String, keys: Seq[Column],
+               payload: Seq[String] = Nil): DataFrame = {
+    val bands = array(keys.zipWithIndex.map { case (k, b) =>
+      struct(lit(b).as("band"), k.as("key")) }: _*)
+    val exploded = explodeRows(rows, (id +: payload).map(col), bands, "bk")
+      .select((id +: payload).map(col) ++
+        Seq(col("bk.band").as("band"), col("bk.key").as("key")): _*)
+    def side(i: Int) = exploded.select(Seq(col("band"), col("key"),
+      col(id).as(s"id$i")) ++ payload.map(c => col(c).as(s"$c$i")): _*)
+    side(1).join(side(2), Seq("band", "key")).filter(col("id1") < col("id2"))
+  }
+
+  /** LSH candidate pairs over a MinHash signature frame: band
+    * sig0..sig{bands·rows−1} of `sigDf`, hash each band, [[bandJoin]].
+    * `affineParams` is prefix-stable, so a wider signature bands exactly
+    * like one `bands`·`rows` wide.
+    */
+  def lshBandPairs(sigDf: DataFrame, id: String, bands: Int, rows: Int): DataFrame =
+    bandJoin(sigDf, id, (0 until bands).map(b =>
+        StableHash.bandKey((0 until rows).map(r => col(s"sig${b * rows + r}")))))
+      .select("id1", "id2").distinct()
+
+  /** LSH candidate pairs from text: shingle hashes, a MinHash signature
+    * `bands`·`rows` wide, then [[lshBandPairs]].
     */
   def lshPairs(df: DataFrame, id: String, text: Column,
                k: Int, bands: Int, rows: Int): DataFrame = {
     val hashed = hashedShingles(df, text, k, Seq(col(id)))
     val sigDf = withMinhashSigs(hashed.select(col(id), col("__hs")),
       col("__hs"), bands * rows).drop("__hs")
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        StableHash.bandKey((0 until rows).map(r => col(s"sig${b * rows + r}")))
-          .as("key"))
-    }
-    // explode_outer for the same inferred-filter reason as in ngramJaccard
-    // (the band array would be inlined twice into a pushed filter)
-    val exploded = sigDf
-      .select(col(id), explode_outer(array(bandCols: _*)).as("bk"))
-      .filter(col("bk").isNotNull)
-      .select(col(id), col("bk.band").as("band"), col("bk.key").as("key"))
-    val l = exploded.select(col("band"), col("key"), col(id).as("id1"))
-    val r = exploded.select(col("band"), col("key"), col(id).as("id2"))
-    l.join(r, Seq("band", "key"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
+    lshBandPairs(sigDf, id, bands, rows)
   }
 
   /** SimHash fingerprint (bits-wide, default 32): per token-hash bit j,
@@ -210,25 +247,15 @@ object Dedup {
       .select(col(id),
         transform(split(col("__txt"), " "), t => StableHash.polyHash(t)).as("__th"))
       .select(col(id), simhashCol(col("__th"), bits).as("simhash"))
-    val exploded = fps.select(col(id), col("simhash"),
-        explode(array((0 until bands).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("simhash"), b * w).bitwiseAND(lit(mask))
-              .as("slice"))): _*)).as("bs"))
-      .select(col(id), col("simhash"), col("bs.band").as("band"),
-        col("bs.slice").as("slice"))
-    val l = exploded.select(col("band"), col("slice"),
-      col(id).as("id1"), col("simhash").as("__f1"))
-    val r = exploded.select(col("band"), col("slice"),
-      col(id).as("id2"), col("simhash").as("__f2"))
-    l.join(r, Seq("band", "slice"))
-      .filter(col("id1") < col("id2"))
+    val slices = (0 until bands).map(b =>
+      shiftright(col("simhash"), b * w).bitwiseAND(lit(mask)))
+    bandJoin(fps, id, slices, Seq("simhash"))
       // verify BEFORE the distinct: the hamming test is a per-row bitop on
       // columns already in hand, so failing candidates never ride the
       // dedup shuffle (clustered corpora make hot slices quadratic in
       // candidates but few survive a tight hamming bound)
       .select(col("id1"), col("id2"),
-        bit_count(col("__f1").bitwiseXOR(col("__f2"))).as("hamming"))
+        bit_count(col("simhash1").bitwiseXOR(col("simhash2"))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -302,29 +329,16 @@ object Dedup {
       s"bandsPerLane=$bandsPerLane must divide 32")
     val w = 32 / bandsPerLane
     val mask = (1L << w) - 1
-    val fps = simhash64(df, id, text)
-    val slices = (0 until bandsPerLane).flatMap { b =>
-      Seq(struct(lit(b).as("band"),
-            shiftright(col("sim_lo"), b * w).bitwiseAND(lit(mask)).as("slice")),
-          struct(lit(b + bandsPerLane).as("band"),
-            shiftright(col("sim_hi"), b * w).bitwiseAND(lit(mask)).as("slice")))
-    }
-    val exploded = fps
-      .select(col(id), col("sim_hi"), col("sim_lo"),
-        explode(array(slices: _*)).as("bs"))
-      .select(col(id), col("sim_hi"), col("sim_lo"),
-        col("bs.band").as("band"), col("bs.slice").as("slice"))
-    val l = exploded.select(col("band"), col("slice"), col(id).as("id1"),
-      col("sim_hi").as("__h1"), col("sim_lo").as("__l1"))
-    val r = exploded.select(col("band"), col("slice"), col(id).as("id2"),
-      col("sim_hi").as("__h2"), col("sim_lo").as("__l2"))
-    l.join(r, Seq("band", "slice"))
-      .filter(col("id1") < col("id2"))
+    // bands 0 until bandsPerLane slice sim_lo, the rest slice sim_hi
+    val slices = Seq("sim_lo", "sim_hi").flatMap(lane =>
+      (0 until bandsPerLane).map(b =>
+        shiftright(col(lane), b * w).bitwiseAND(lit(mask))))
+    bandJoin(simhash64(df, id, text), id, slices, Seq("sim_hi", "sim_lo"))
       // verify before the distinct, as in simhashBandPairs: failing
       // candidates never ride the dedup shuffle
       .select(col("id1"), col("id2"),
-        (bit_count(col("__h1").bitwiseXOR(col("__h2"))) +
-          bit_count(col("__l1").bitwiseXOR(col("__l2")))).as("hamming"))
+        (bit_count(col("sim_hi1").bitwiseXOR(col("sim_hi2"))) +
+          bit_count(col("sim_lo1").bitwiseXOR(col("sim_lo2")))).as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
   }
@@ -385,18 +399,9 @@ object Dedup {
     // sorted exchanges over independently recomputed inputs. Posting lists
     // are short by construction (distinct shingles); at web scale you cap
     // them (stop-shingles), which bounds the quadratic term per list.
-    // explode_OUTER + post-filter, deliberately: plain explode makes the
-    // optimizer infer `size(e)>0 AND isnotnull(e)` and push it below every
-    // projection by ALIAS SUBSTITUTION — the whole tokens→shingles→hashes
-    // chain ends up inlined twice in a Filter under the scan, re-evaluating
-    // ~3× per doc (measured ~14× slower). explode_outer infers no filter;
-    // the null rows (shingle-less docs) drop via a cheap isNotNull on the
-    // generated ATTRIBUTE, which cannot be pushed below the Generate.
     val keepCols = Seq(col(id).as("pid"), size(col("__hs")).as("nsh")) ++
       (if (blockCol.isDefined) Seq(col("blk")) else Nil)
-    val posting = base
-      .select(keepCols :+ explode_outer(col("__hs")).as("s"): _*)
-      .filter(col("s").isNotNull)
+    val posting = explodeRows(base, keepCols, col("__hs"), "s")
     val groupKeys = Seq(col("s")) ++ (if (blockCol.isDefined) Seq(col("blk")) else Nil)
     val grouped = posting.groupBy(groupKeys: _*)
       .agg(collect_list(struct(col("pid"), col("nsh"))).as("ps"))
@@ -408,15 +413,12 @@ object Dedup {
     // way and keeps the operator deterministic.)
     val lists = if (maxPostingLen == Int.MaxValue) grouped
       else grouped.filter(size(col("ps")) <= maxPostingLen)
-    // same explode_outer discipline as `posting`: the n² pair-generation
-    // expression must not be inlined into an inferred pre-Generate filter
-    val pairs = lists.select(explode_outer(flatten(
+    val pairs = explodeRows(lists, Nil, flatten(
       transform(col("ps"), a => filter(
         transform(col("ps"), b => when(a("pid") < b("pid"),
           struct(a("pid").as("id1"), b("pid").as("id2"),
             a("nsh").as("n1"), b("nsh").as("n2")))),
-        x => x.isNotNull)))).as("p"))
-      .filter(col("p").isNotNull)
+        x => x.isNotNull))), "p")
     pairs.groupBy(col("p.id1").as("id1"), col("p.id2").as("id2"))
       .agg(count(lit(1)).as("inter"), first(col("p.n1")).as("n1"),
         first(col("p.n2")).as("n2"))

@@ -303,7 +303,7 @@ object DedupQueries extends QueryPack {
       val agree = (0 until SIG)
         .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
         .reduce(_ + _)
-      Dedup.lshPairs(docs, "doc_id", col("text"), K, BANDS, ROWS)
+      Dedup.lshBandPairs(sigs, "doc_id", BANDS, ROWS)
         .join(left, Seq("id1")).join(right, Seq("id2"))
         .withColumn("n_agree", agree)
         .withColumn("n_inter", size(array_intersect(
@@ -335,9 +335,11 @@ object DedupQueries extends QueryPack {
     // (docs shorter than the shingle width).
     "d22_containment" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val hashed = Dedup.hashedShingles(docs, col("text"), K, Seq(col("doc_id")))
-        .select(col("doc_id"), array_distinct(col("__hs")).as("hs"))
-      Dedup.lshPairs(docs, "doc_id", col("text"), K, BANDS, ROWS)
+      val shingled = Dedup.hashedShingles(docs, col("text"), K, Seq(col("doc_id")))
+        .select(col("doc_id"), col("__hs"))
+      val hashed = shingled.select(col("doc_id"), array_distinct(col("__hs")).as("hs"))
+      val sigs = Dedup.withMinhashSigs(shingled, col("__hs"), BANDS * ROWS)
+      Dedup.lshBandPairs(sigs, "doc_id", BANDS, ROWS)
         .join(hashed.select(col("doc_id").as("id1"), col("hs").as("hs1")),
           Seq("id1"))
         .join(hashed.select(col("doc_id").as("id2"), col("hs").as("hs2")),
@@ -495,21 +497,7 @@ object DedupQueries extends QueryPack {
       val sigs = Dedup.withMinhashSigs(hashed, col("__hs"), SIG).drop("__hs")
       val configs = Seq((2, 8), (4, 4), (8, 2))
       val pairs = configs.map { case (b, r) =>
-        val bandCols = (0 until b).map { bi =>
-          struct(lit(bi).as("band"),
-            StableHash.bandKey((0 until r).map(ri => col(s"sig${bi * r + ri}")))
-              .as("key"))
-        }
-        val ex = sigs
-          .select(col("doc_id"), explode_outer(array(bandCols: _*)).as("bk"))
-          .filter(col("bk").isNotNull)
-          .select(col("doc_id"), col("bk.band").as("band"),
-            col("bk.key").as("key"))
-        ex.select(col("band"), col("key"), col("doc_id").as("id1"))
-          .join(ex.select(col("band"), col("key"), col("doc_id").as("id2")),
-            Seq("band", "key"))
-          .filter(col("id1") < col("id2"))
-          .select(col("id1"), col("id2")).distinct()
+        Dedup.lshBandPairs(sigs, "doc_id", b, r)
           .select(lit(b).as("bands"), lit(r).as("rows_per_band"),
             col("id1"), col("id2"))
       }.reduce(_ unionAll _)
@@ -562,9 +550,9 @@ object DedupQueries extends QueryPack {
       // distinct exchange is deleted; both join sides and the sizes
       // aggregate reuse the same exchange (ReusedExchange), so the
       // shingle generation runs once per call instead of twice
-      val ss = Dedup.hashedShingles(Tables.documents(s, d), col("text"), K,
-          Seq(col("source")))
-        .select(col("source"), explode(col("__hs")).as("h"))
+      val hashed = Dedup.hashedShingles(Tables.documents(s, d), col("text"),
+        K, Seq(col("source")))
+      val ss = Dedup.explodeRows(hashed, Seq(col("source")), col("__hs"), "h")
         .repartition(col("h"))
         .dropDuplicates("source", "h")
       val sizes = ss.groupBy("source").agg(count(lit(1)).as("sz"))

@@ -13,6 +13,16 @@ import graft.domain._
   */
 object DomainQueries extends QueryPack {
 
+  /** The screen's result rows. The driver reads rows, never the ledger,
+    * so compile's ledger listener is released at once: an unclosed
+    * `Result` keeps its listener on the session for every later query.
+    */
+  private def screenRows(s: SparkSession, cfg: ScreenConfig): DataFrame = {
+    val r = Pipeline.compile(s, cfg)
+    r.close()
+    r.results
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // A11 nuclearity over enumerated slabs of the fixture bulks.
     "a11_nuclearity" -> ((s, _) => {
@@ -48,7 +58,7 @@ object DomainQueries extends QueryPack {
              "adsorbate_smiles": "*CO", "target": -1.0, "range": 1.0},
             {"type": "inference", "label": "expensive"}]
         }""", Map.empty)
-      Pipeline.compile(s, cfg).results
+      screenRows(s, cfg)
         // stringified: the driver comparator cannot sort/hash array columns
         .select(col("bulk_id"),
           concat_ws(",", col("slab_millers")).as("slab_millers"),
@@ -73,7 +83,7 @@ object DomainQueries extends QueryPack {
           "max_miller_index": 1,
           "steps": [{"type": "inference", "label": "cheap"}]
         }""", Map.empty)
-      Pipeline.compile(s, cfg).results
+      screenRows(s, cfg)
         .select(col("bulk_id"),
           concat_ws(",", col("slab_millers")).as("slab_millers"),
           col("slab_shift"), col("slab_top"), col("adsorbate_smiles"),

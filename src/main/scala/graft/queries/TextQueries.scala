@@ -20,6 +20,13 @@ object TextQueries extends QueryPack {
   private val CmW = 1024
   private val CmD = 4
 
+  // the decontaminate family's (t8, t22, t17) distinct 8-gram rows:
+  // (doc_id, g), docs shorter than 8 tokens contributing none
+  private def eightGrams(docs: DataFrame): DataFrame =
+    Dedup.explodeRows(
+      docs.select(col("doc_id"), split(col("text"), " ").as("__ts")),
+      Seq(col("doc_id")), Dedup.shinglesFromTokens(col("__ts"), 8), "g")
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t1_langid" -> ((s, d) => {
       val toks = TextOps.tokens(col("text"))
@@ -135,11 +142,7 @@ object TextQueries extends QueryPack {
     // side is the small one and AQE broadcasts it when it fits.
     "t8_decontaminate" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val grams = docs
-        .select(col("doc_id"), split(col("text"), " ").as("__ts"))
-        .select(col("doc_id"),
-          explode_outer(graft.ops.Dedup.shinglesFromTokens(col("__ts"), 8)).as("g"))
-        .filter(col("g").isNotNull)
+      val grams = eightGrams(docs)
       val bench = grams.filter(col("doc_id") % 10 === 0).select("g").distinct()
       val hits = grams.filter(col("doc_id") % 10 =!= 0)
         .join(bench, Seq("g"))
@@ -160,11 +163,7 @@ object TextQueries extends QueryPack {
     // is an int/int IEEE divide (bit-identical cross-engine).
     "t22_contamination_report" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val grams = docs
-        .select(col("doc_id"), split(col("text"), " ").as("__ts"))
-        .select(col("doc_id"),
-          explode_outer(graft.ops.Dedup.shinglesFromTokens(col("__ts"), 8)).as("g"))
-        .filter(col("g").isNotNull)
+      val grams = eightGrams(docs)
       val bench = grams.filter(col("doc_id") % 10 === 0).select("g").distinct()
       val hits = grams.filter(col("doc_id") % 10 =!= 0)
         .join(bench, Seq("g"))
@@ -361,11 +360,7 @@ object TextQueries extends QueryPack {
     // passing proves the prefilter changed the plan, not the answer.
     "t17_bloom_decontaminate" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val grams = docs
-        .select(col("doc_id"), split(col("text"), " ").as("__ts"))
-        .select(col("doc_id"),
-          explode_outer(Dedup.shinglesFromTokens(col("__ts"), 8)).as("g"))
-        .filter(col("g").isNotNull)
+      val grams = eightGrams(docs)
       val benchGrams = grams.filter(col("doc_id") % 10 === 0)
         .select("g").distinct()
       // sized for the benchmark side (50k docs × ~200 grams at sf0.1 ≪ 1M);

@@ -61,6 +61,14 @@ object GraftSqlBridge {
     }
   }
 
+  /** Free a persisted RDD's blocks without blocking: the call
+    * `RDD.unpersist` makes (`private[spark]`), minus the WARN it logs for
+    * every locally checkpointed RDD (one per CC or k-means round). The
+    * id leaves the persistent-RDD set exactly as with `RDD.unpersist`.
+    */
+  def unpersistRDD(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+
   /** Idempotently register an extra planner strategy on a live session —
     * lets custom-plan operators work on sessions built without
     * `withExtensions` (Verify/Bench/driver sessions).

@@ -177,6 +177,69 @@ class RegistrySpec extends SparkTestBase {
   }
 
   // ---------------------------------------------------------------------
+  // The inferred-filter lint (PLANS.md, d25 / ngramJaccard): a plain
+  // explode of an array ATTRIBUTE lets InferFiltersFromGenerate add
+  // `size(arr) > 0`, and alias substitution pushes it down with the whole
+  // split → shingle → polyHash chain inlined — beneath `parallelize`'s
+  // round-robin exchange, so the chain runs twice, once on the single
+  // scan task. The rule: no Filter under a round-robin Repartition holds
+  // a higher-order function, a ScalaUDF or a polyHash. Runs on the
+  // OPTIMIZED plan, where the inferred filter exists.
+  // ---------------------------------------------------------------------
+
+  private object InferredFilterLint {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Repartition}
+    import graft.functions.{PolyHash64Expr, PolyHashExpr}
+
+    private def heavy(e: Expression): Boolean = e.exists {
+      case _: HigherOrderFunction | _: ScalaUDF => true
+      case _: PolyHashExpr | _: PolyHash64Expr => true
+      case _ => false
+    }
+
+    def check(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.queryExecution.optimizedPlan.collect {
+        case r: Repartition if r.shuffle => r.child.collect {
+          case f: Filter if heavy(f.condition) =>
+            s"Filter under a round-robin exchange: ${f.condition.sql.take(160)}"
+        }
+      }.flatten
+  }
+
+  // every query that runs Dedup's shingle or band chain
+  private val shingleChainQueries: Seq[String] =
+    (DedupQueries.queries.keys ++ Seq("t8_decontaminate",
+      "t17_bloom_decontaminate", "t22_contamination_report",
+      "t26_ngram_novelty", "mm6_payload_neardup")).toSeq.sorted
+
+  test("plan lint: no shingle-chain Filter beneath a round-robin exchange " +
+    "(the inferred-filter rule, mechanized)") {
+    val failures = shingleChainQueries.flatMap { name =>
+      InferredFilterLint.check(SparkEntry.queries(name)(spark, sf))
+        .map(v => s"$name: $v")
+    }
+    assert(failures.isEmpty,
+      "explode an array attribute through Dedup.explodeRows:\n" +
+        failures.mkString("\n"))
+  }
+
+  test("inferred-filter lint is failing-by-construction on the pre-fix d25 " +
+    "spelling and green on Dedup.explodeRows") {
+    import org.apache.spark.sql.functions.{col, explode}
+    import graft.ops.Dedup
+    val hashed = Dedup.hashedShingles(graft.Tables.documents(spark, sf),
+      col("text"), 3, Seq(col("source")))
+    // d25's spelling before the fix: a plain explode of the __hs attribute
+    val preFix = hashed.select(col("source"), explode(col("__hs")).as("h"))
+    assert(InferredFilterLint.check(preFix).nonEmpty,
+      "the lint must flag a plain explode of the shingle-hash attribute")
+    val postFix = Dedup.explodeRows(hashed, Seq(col("source")), col("__hs"), "h")
+    assert(InferredFilterLint.check(postFix).isEmpty,
+      "the lint must accept the guarded explode")
+  }
+
+  // ---------------------------------------------------------------------
   // The broadcast-cross-join lint — mechanizing the other standing scale
   // rule (until now enforced only by per-round grep): a join with NO
   // equi-key executes as CartesianProduct / BroadcastNestedLoopJoin, and
