@@ -53,6 +53,17 @@ object GraphQueries extends QueryPack {
   // at larger corpora the quadratic exact side stops growing.
   private val Gr7Cap = 4000
 
+  /** `hi·2^32 + lo`, raising on an id outside [0, 2^bits): beyond it the
+    * packed BIGINT overflows or collides with another pair's key, and the
+    * decoded pair is silently wrong. Null ids pass through as null.
+    */
+  private def packedPair(hi: Column, lo: Column, bits: Int, site: String): Column = {
+    val bound = lit(1L << bits)
+    when(hi < 0 || hi >= bound || lo < 0 || lo >= bound, raise_error(lit(
+        s"$site: node ids must lie in [0, 2^$bits) for the packed pair key")))
+      .otherwise(hi * lit(4294967296L) + lo)
+  }
+
   /** Directed edges: customer→supplier for every (order, lineitem) pair,
     * plus supplier→customer back-edges on returned lines ('R') so the
     * graph has cycles and iteration is non-trivial. Node ids are bipartite
@@ -468,9 +479,10 @@ object GraphQueries extends QueryPack {
       // sf1 66.8 → 40.3 s, sf10 611.6 → 342.6 s, same oracle hashes)
       val pairRows = capped.select(
         explode(graft.functions.Exprs.packedPairs(col("ns"))).as("k"))
+      // edge markers share the pairs' [0, 2^30) keyspace
       val edgeRows = tb.oriented.select(
-        ((least(col("src"), col("dst")) * lit(4294967296L) +
-          greatest(col("src"), col("dst"))) * 2).as("k"))
+        (packedPair(least(col("src"), col("dst")), greatest(col("src"), col("dst")),
+          30, "gt5_link_prediction") * 2).as("k"))
       val locals = graft.ops.TopPairs.runLengthTopK(
         s, pairRows.unionByName(edgeRows), 20)
       locals.toDF("uv", "n_common")
@@ -913,20 +925,20 @@ object GraphQueries extends QueryPack {
     //  - b1's inner distinct is gone — it only fed b2's union, whose own
     //    distinct already dedups, so the extra pair-keyed exchange bought
     //    nothing;
-    //  - pairs dedup PACKED as one BIGINT v·2^32 + u (node ids < 2^31,
-    //    the gt5 packed-pair bound): the distinct exchanges/compares 8-byte
-    //    longs instead of 16-byte pairs, and the per-start count rides a
-    //    shiftright of the same key;
+    //  - pairs dedup PACKED as one BIGINT v·2^32 + u (node ids in
+    //    [0, 2^31), enforced by packedPair): the distinct exchanges and
+    //    compares 8-byte longs instead of 16-byte pairs, and the per-start
+    //    count rides a shiftright of the same key;
     //  - the ball count partial-aggregates to ≤|starts| rows per task
     //    before its exchange.
+    def pack(v: Column, u: Column) = packedPair(v, u, 31, "gr7_hyperball")
     val b1 = nodes.filter(col("id") < Gr7Cap)
-      .select((col("id") * lit(4294967296L) + col("id")).as("k"))
-      .unionAll(e1.select(
-        (col("src") * lit(4294967296L) + col("dst")).as("k")))
+      .select(pack(col("id"), col("id")).as("k"))
+      .unionAll(e1.select(pack(col("src"), col("dst")).as("k")))
     val b2 = b1.unionAll(
         e1.select(col("src").as("v"), col("dst").as("w"))
           .join(e.select(col("src").as("w"), col("dst").as("u")), Seq("w"))
-          .select((col("v") * lit(4294967296L) + col("u")).as("k")))
+          .select(pack(col("v"), col("u")).as("k")))
       .distinct()
     val exact = b2.groupBy(shiftright(col("k"), 32).as("v"))
       .agg(count(lit(1)).as("ball"))

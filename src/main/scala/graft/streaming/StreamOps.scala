@@ -66,10 +66,10 @@ object StreamOps {
         val fresh = batch
           .withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn")
-        val existing =
-          try Some(batch.sparkSession.read.parquet(path).select(col(key)))
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        existing.fold(fresh)(e => fresh.join(e, Seq(key), "left_anti"))
+        // only a missing table, or one with no committed file, is empty:
+        // a table without the key column fails the batch, never appends it
+        graft.domain.MemoCache.readTable(batch.sparkSession, path)
+          .fold(fresh)(e => fresh.join(e.select(col(key)), Seq(key), "left_anti"))
           .write.mode("append").parquet(path)
       }
       .start()

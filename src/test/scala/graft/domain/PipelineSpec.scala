@@ -211,6 +211,109 @@ class MemoCacheSpec extends SparkTestBase {
     val cache = new MemoCache(spark, dir.toString, "energy", "v1")
     intercept[Exception] { cache.read() }
   }
+
+  private def counted(acc: org.apache.spark.util.LongAccumulator)
+                     (df: org.apache.spark.sql.DataFrame) = {
+    val f = udf((k: String) => { acc.add(1); k.length.toDouble })
+    df.withColumn("value", f(col("key")))
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Map[String, Double] =
+    df.collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+
+  private def runDirs(table: java.nio.file.Path): Seq[String] =
+    java.nio.file.Files.list(table).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+      .map(_.getFileName.toString).filterNot(n => n.startsWith("_") || n.startsWith(".")).sorted
+
+  test("memo cache: a second action on through's result does not re-run compute") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo").toString
+    val acc = spark.sparkContext.longAccumulator("computed")
+    val cache = new MemoCache(spark, dir, "energy", "v1")
+    val r1 = cache.through(Seq("a", "bb").toDF("key"), "key")(counted(acc))
+    assert(acc.value == 2)
+    assert(rows(r1) == Map("a" -> 1.0, "bb" -> 2.0) && r1.count() == 2)
+    val r2 = cache.through(Seq("bb", "ccc", "ccc").toDF("key"), "key")(counted(acc))
+    assert(acc.value == 3, "the append is compute's one execution")
+    assert(rows(r2) == Map("bb" -> 2.0, "ccc" -> 3.0) && r2.count() == 2)
+    assert(acc.value == 3, "actions on the result read the written run")
+  }
+
+  test("memo cache: a crashed append beside committed runs reads only the " +
+    "committed rows, and resume recomputes just the lost keys") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo")
+    val acc = spark.sparkContext.longAccumulator("computed")
+    val cache = new MemoCache(spark, dir.toString, "energy", "v1")
+    cache.through(Seq("a", "bb").toDF("key"), "key")(counted(acc)).count()
+    // what an append that died before its job commit leaves: its rows
+    // only under the run's _temporary
+    val table = dir.resolve("energy/v=v1")
+    Seq(("ccc", 3.0), ("dddd", 4.0)).toDF("key", "value")
+      .write.parquet(table.resolve("run-1/_temporary/0/task_0").toString)
+    assert(rows(cache.read().get) == Map("a" -> 1.0, "bb" -> 2.0))
+    acc.reset()
+    val r = cache.through(Seq("a", "bb", "ccc", "dddd").toDF("key"), "key")(counted(acc))
+    assert(acc.value == 2, "only the lost keys recompute")
+    assert(rows(r) == Map("a" -> 1.0, "bb" -> 2.0, "ccc" -> 3.0, "dddd" -> 4.0))
+    assert(r.count() == 4 && cache.size() == 4)
+    assert(runDirs(table) == Seq("run-0", "run-1", "run-2"))
+  }
+
+  test("memo cache: resume across compact() gives the same rows, one run " +
+    "directory, and no recompute of hits") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo")
+    val acc = spark.sparkContext.longAccumulator("computed")
+    val cache = new MemoCache(spark, dir.toString, "energy", "v1")
+    Seq(Seq("a", "bb"), Seq("bb", "ccc"), Seq("dddd")).foreach { ks =>
+      cache.through(ks.toDF("key"), "key")(counted(acc)).count()
+    }
+    val table = dir.resolve("energy/v=v1")
+    assert(runDirs(table).size == 3)
+    val before = rows(cache.read().get)
+    cache.compact()
+    assert(runDirs(table) == Seq("run-2-compacted"))
+    assert(rows(cache.read().get) == before && cache.size() == 4)
+    // a crash after the publishing rename, before the deletes: the
+    // superseded runs come back beside the compacted one
+    val compacted = table.resolve("run-2-compacted")
+    Seq("run-0", "run-2").foreach { r =>
+      org.apache.commons.io.FileUtils.copyDirectory(compacted.toFile, table.resolve(r).toFile)
+    }
+    assert(cache.size() == 4, "superseded runs must not fan a key out")
+    acc.reset()
+    val r = cache.through(Seq("a", "bb", "ccc", "dddd", "eeeee").toDF("key"), "key")(counted(acc))
+    assert(acc.value == 1, "hits must not recompute after a compaction")
+    assert(rows(r) == before + ("eeeee" -> 5.0) && r.count() == 5)
+    cache.compact()
+    assert(runDirs(table) == Seq("run-3-compacted") && cache.size() == 5)
+  }
+
+  test("memo cache: a committed file whose schema differs from the declared " +
+    "one fails loudly") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo").toString
+    val acc = spark.sparkContext.longAccumulator("computed")
+    val cache = new MemoCache(spark, dir, "energy", "v1")
+    cache.through(Seq("a").toDF("key"), "key")(counted(acc)).count()
+    acc.reset()
+    val retyped = intercept[IllegalStateException] {
+      cache.through(Seq("a", "bb").toDF("key"), "key")(
+        counted(acc)(_).withColumn("value", col("value").cast("string")))
+    }
+    assert(retyped.getMessage.contains("schema"))
+    intercept[IllegalStateException] {
+      cache.through(Seq("a", "bb").toDF("key"), "key")(
+        counted(acc)(_).withColumn("extra", lit(1)))
+    }
+    assert(acc.value == 0, "a schema mismatch fails before compute runs")
+    // a committed run whose file is not parquet at all
+    val run = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, "energy/v=v1/run-5"))
+    java.nio.file.Files.write(run.resolve("part-00000.parquet"), "not parquet".getBytes)
+    intercept[Exception] { cache.read() }
+  }
 }
 
 class ModelRegistrySpec extends SparkTestBase {

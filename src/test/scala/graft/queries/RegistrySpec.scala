@@ -207,17 +207,13 @@ class RegistrySpec extends SparkTestBase {
       }.flatten
   }
 
-  // every query that runs Dedup's shingle or band chain
-  private val shingleChainQueries: Seq[String] =
-    (DedupQueries.queries.keys ++ Seq("t8_decontaminate",
-      "t17_bloom_decontaminate", "t22_contamination_report",
-      "t26_ngram_novelty", "mm6_payload_neardup")).toSeq.sorted
-
+  // registry-wide, with no allowlist: the shingle chain is where the trap
+  // was found, but any explode of a heavy array attribute can set it
   test("plan lint: no shingle-chain Filter beneath a round-robin exchange " +
     "(the inferred-filter rule, mechanized)") {
-    val failures = shingleChainQueries.flatMap { name =>
-      InferredFilterLint.check(SparkEntry.queries(name)(spark, sf))
-        .map(v => s"$name: $v")
+    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        InferredFilterLint.check(fn(spark, sf)).map(v => s"$name: $v")
     }
     assert(failures.isEmpty,
       "explode an array attribute through Dedup.explodeRows:\n" +

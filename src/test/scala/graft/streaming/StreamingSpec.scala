@@ -306,6 +306,24 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("dedup ingest sink fails on a table without the key column instead " +
+    "of reading it as empty") {
+    implicit val sql = spark.sqlContext
+    val ms = MemoryStream[StreamOps.Evt]
+    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    Seq(("x", 1L)).toDF("other", "n").write.parquet(s"$dir/table")
+    val q = StreamOps.startDedupIngest(ms.toDF(), "event_id", "ts",
+      s"$dir/table", s"$dir/ckpt")
+    try {
+      ms.addData(StreamOps.Evt(1, ts(1), 10, "a", 1.0))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(spark.read.parquet(s"$dir/table").count() == 1,
+        "no batch row may be appended")
+    } finally q.stop()
+  }
+
   test("outer interval join emits unmatched errors with null click after watermark") {
     implicit val sql = spark.sqlContext
     val errs = MemoryStream[StreamOps.Evt]
