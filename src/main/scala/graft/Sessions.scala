@@ -30,6 +30,16 @@ import org.apache.spark.sql.SparkSession
   *     retuning — exactly the knob a 1000-executor cluster job sets
   *     (initialPartitionNum ≈ 2-4× total cores) instead of hand-sizing
   *     shuffle.partitions per dataset.
+  *   - codegen cache at 512 classes, not the 100 default: the cache is a
+  *     Guava LRU split into 4 segments, so 100 means 25 per segment. A
+  *     screen pass (Pipeline.compile + two MemoCache.through calls)
+  *     generates 96 distinct classes and the 10 registry_light queries
+  *     149; at 100 whichever segment the code hashes overfill re-compile
+  *     (Janino, then JIT from cold) on every pass: 0, 24 or 44 classes a
+  *     screen pass depending on the run, which spread perfbench's screen
+  *     work_per_s over 2760–3790 1/s in three runs on 4 vCPUs. At 512
+  *     both sets stay resident after their first pass, for ~2 MB of
+  *     retained heap.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -41,6 +51,7 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", "512")
       // TypedImperativeAggregate partials (gt5's smallest-k neighborhood
       // cap) run under ObjectHashAggregateExec, whose hash map falls back
       // to sort-based aggregation after this many distinct keys — the 128
