@@ -1,14 +1,39 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+import java.lang.ref.WeakReference
 
-/** Loaders for the driver-generated corpus (TESTDATA.md).
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** The table catalog: loaders for the driver-generated corpus (TESTDATA.md)
+  * and for any other parquet table read by path.
   *
-  * Every operator query receives `(spark, sfDir)` and reads one or more of
-  * these tables. Parquet scans are distributed and columnar; Catalyst prunes
-  * columns + pushes predicates into the scan, so loaders stay unprojected
-  * here and each query selects only what it needs (visible as ReadSchema /
-  * PushedFilters in `.explain`).
+  * The catalog holds metadata only, never rows. For each table path it
+  * keeps the schema Spark inferred, keyed on the table's committed
+  * file set: the sorted (path, length, modification time) of every leaf
+  * file, read with a driver-side listing that skips what Spark's own file
+  * index skips (`_SUCCESS`, `_temporary`, dot files). A load lists the
+  * files, and while the key matches it reads with the catalogued schema
+  * (`spark.read.schema(s).parquet(path)`), which plans no
+  * schema-inference job. A rewritten, added or removed file changes the
+  * key, so the schema is inferred again: a stale schema never reads a
+  * changed table as nulls. Each load still builds a fresh relation with
+  * its own file listing and fresh attribute ids, so two loads of one
+  * table self-join as before.
+  *
+  * Session scope: the inferred schema depends on the session's reader
+  * conf (`nanosAsLong` turns `events.ts` into BIGINT), so entries belong
+  * to one session. A load from another session drops them all, like
+  * [[graft.ops.SharedBase]]; the catalog holds its session only weakly,
+  * so a stopped session does not stay reachable through it. The
+  * parquet/file reader conf is part of the key as well, so a conf change
+  * within the session re-infers.
+  *
+  * Loaders stay unprojected: Catalyst prunes columns and pushes
+  * predicates into the scan, so each query selects only what it needs
+  * (ReadSchema / PushedFilters in `.explain`).
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -16,7 +41,11 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$table.parquet")
+    read(spark, s"$sfDir/$table.parquet")
+
+  /** The parquet table at `path`, read with its catalogued schema. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(Catalog.schema(spark, path)).parquet(path)
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -35,6 +64,7 @@ object Tables {
     * UTC session zone makes NTZ and TZ agree — the zone is pinned by
     * [[Sessions.builder]], shared by every entry point). Narrow and
     * codegen'd; no behavior change when the file is already nanos-BIGINT.
+    * The type is read off the catalogued schema.
     *
     * Known perf trade-off on MICROS corpora only: the withColumn rewrite
     * sits between the scan and any ts predicate, so ts filters stop
@@ -56,4 +86,72 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
+
+  private object Catalog {
+    private final case class Leaf(path: String, length: Long, modified: Long)
+    private final case class Entry(files: Seq[Leaf], conf: Map[String, String],
+                                   schema: StructType)
+
+    private var session = new WeakReference[SparkSession](null)
+    private val entries = scala.collection.mutable.HashMap.empty[String, Entry]
+
+    /** The schema of the table at `path`, inferred once per (session,
+      * reader conf, committed file set). A missing or empty table is
+      * never catalogued: its inference throws Spark's own error.
+      */
+    def schema(s: SparkSession, path: String): StructType = {
+      val files = leaves(s, path)
+      val conf = readerConf(s)
+      val hit = synchronized {
+        if (session.get ne s) {
+          entries.clear()
+          session = new WeakReference(s)
+        }
+        entries.get(path).filter(e => e.files == files && e.conf == conf)
+      }
+      hit.map(_.schema).getOrElse {
+        // inferred outside the lock: a concurrent load of another table
+        // does not wait on this job
+        val inferred = s.read.parquet(path).schema
+        synchronized {
+          if (session.get eq s) entries.update(path, Entry(files, conf, inferred))
+        }
+        inferred
+      }
+    }
+
+    /** The set conf that can change what parquet schema inference
+      * returns.
+      */
+    private def readerConf(s: SparkSession): Map[String, String] =
+      s.conf.getAll.filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") ||
+          k.startsWith("spark.sql.files.") || k.startsWith("spark.sql.sources.") ||
+          k == "spark.sql.caseSensitive"
+      }
+
+    /** Every leaf file under `path` (or `path` itself), sorted; empty when
+      * `path` does not exist.
+      */
+    private def leaves(s: SparkSession, path: String): Seq[Leaf] = {
+      val root = new Path(path)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      def walk(p: Path): Seq[Leaf] = fs.listStatus(p).toSeq
+        .filterNot(f => hidden(f.getPath.getName))
+        .flatMap { f =>
+          if (f.isDirectory) walk(f.getPath)
+          else Seq(Leaf(f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+      try walk(root).sortBy(_.path)
+      catch { case _: FileNotFoundException => Nil }
+    }
+
+    /** The names Spark's file index leaves out of a table; the parquet
+      * summary files it keeps stay in the key.
+      */
+    private def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")) &&
+        !name.startsWith("_metadata") && !name.startsWith("_common_metadata")
+  }
 }

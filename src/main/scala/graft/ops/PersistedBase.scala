@@ -81,7 +81,10 @@ private[graft] object PersistedBase {
 
   /** Serve `name` for content key `key` from the store, building and
     * persisting it first if absent. The returned frame is always the
-    * parquet read-back (cold and warm paths yield byte-identical data).
+    * parquet read-back (cold and warm paths yield byte-identical data),
+    * read through [[graft.Tables.read]]: the entry's schema is inferred
+    * once per session and file set, so a warm serve plans no
+    * schema-inference job.
     *
     * `version` is the DERIVATION version — the content key fingerprints
     * the source DATA, not the build closure, so a logic change to the
@@ -122,6 +125,6 @@ private[graft] object PersistedBase {
         }
       }
     }
-    s.read.parquet(dir.toString)
+    graft.Tables.read(s, dir.toString)
   }
 }

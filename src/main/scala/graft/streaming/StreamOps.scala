@@ -157,10 +157,9 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val spark = batch.sparkSession
         val keys = Seq("win_start", "event_type")
-        val existing =
-          try Some(spark.read.parquet(path))
-          catch { case _: org.apache.spark.sql.AnalysisException => None }
-        val merged = existing
+        // only a missing table, or one with no committed file, is empty:
+        // a table that cannot be read fails the batch, never overwrites it
+        val merged = graft.domain.MemoCache.readTable(spark, path)
           .fold(batch)(e => e.join(batch, keys, "left_anti").unionByName(batch))
         // the checkpoint severs the plan from the path we overwrite
         graft.ops.Blocks.using(merged)(_.write.mode("overwrite").parquet(path))

@@ -1,0 +1,132 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{LongType, StringType}
+
+/** Pins the table catalog ([[Tables]]): a warm load plans no job, and a
+  * changed file set or another session is never served a stale schema.
+  */
+class TablesSpec extends SparkTestBase {
+  import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
+
+  /** Jobs `body` starts in `s`'s context. */
+  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
+    val n = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusAccess.drain(s.sparkContext)
+    s.sparkContext.addSparkListener(l)
+    try {
+      body
+      ListenerBusAccess.drain(s.sparkContext)
+    } finally s.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  private def tempDir(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  test("after a first build, building the registry_light queries runs no job") {
+    // perfbench's registry_light workload, one query per operator family
+    val light = Seq("a3_array_min_argmin", "d7_dup_groups", "e19_decayed_engagement",
+      "f10_one_sided_range", "g2_posexplode_tokens", "j1_cross_join_broadcast",
+      "q6_forecast_revenue", "s1_global_topk", "sk1_bottomk_distinct",
+      "t20_weighted_sample")
+    light.foreach(q => SparkEntry.queries(q)(spark, sf))
+    val jobs = light.map(q => q -> jobsDuring(spark)(SparkEntry.queries(q)(spark, sf)))
+      .filter(_._2 > 0)
+    assert(jobs.isEmpty, s"construction ran jobs: $jobs")
+  }
+
+  test("a warm load runs no job; a cold one infers once") {
+    val dir = tempDir("tables-warm")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 1)
+    assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 0)
+  }
+
+  test("a table overwritten in place with other columns loads its new schema") {
+    val dir = tempDir("tables-overwrite")
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+    Seq((2L, 7L)).toDF("id", "n").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val after = Tables.load(spark, dir, "t")
+    assert(after.columns.toSeq == Seq("id", "n"))
+    assert(after.as[(Long, Long)].collect().toSeq == Seq((2L, 7L)),
+      "the new rows must read through, never as nulls")
+  }
+
+  test("a file added to a directory-style table is picked up") {
+    val dir = tempDir("tables-append")
+    Seq(1L, 2L).toDF("k").coalesce(1).write.parquet(s"$dir/t.parquet")
+    assert(Tables.load(spark, dir, "t").count() == 2)
+    // the added file carries a column the first one lacks: a new file
+    // set is inferred again, from whichever footer Spark reads
+    Seq((3L, "x")).toDF("k", "extra").write.mode("append").parquet(s"$dir/t.parquet")
+    assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 1,
+      "a changed file set must be inferred again")
+    assert(Tables.load(spark, dir, "t").count() == 3)
+  }
+
+  test("two loads of one table self-join with fresh attribute ids") {
+    val a = Tables.orders(spark, sf)
+    val b = Tables.orders(spark, sf)
+    assert(a.queryExecution.analyzed.output.map(_.exprId).toSet
+      .intersect(b.queryExecution.analyzed.output.map(_.exprId).toSet).isEmpty)
+    val n = a.as("a").join(b.as("b"), col("a.o_orderkey") === col("b.o_orderkey"))
+      .select(col("a.o_orderkey"), col("b.o_custkey")).count()
+    assert(n == a.count())
+  }
+
+  test("another session gets its own events.ts type") {
+    // a TIMESTAMP(NANOS) ts, the physical type nanosAsLong exists for;
+    // Spark writes no nanos timestamps, so the file is written with
+    // parquet's own example writer
+    val dir = tempDir("tables-nanos")
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", 1704067200123456789L))
+    finally w.close()
+    val nanos = Tables.events(spark, dir)
+    assert(nanos.schema("ts").dataType == LongType)
+    assert(nanos.select("ts").as[Long].head() == 1704067200123456789L)
+    val other = spark.newSession()
+    other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[Exception](Tables.events(other, dir).schema)
+    assert(e.getMessage.contains("TIMESTAMP(NANOS"),
+      s"the other session must infer for itself: ${e.getMessage}")
+    // and the first session, back again, still reads its BIGINT nanos
+    assert(Tables.events(spark, dir).schema("ts").dataType == LongType)
+  }
+
+  test("a reader-conf change within a session re-infers") {
+    val dir = tempDir("tables-conf")
+    val schema = MessageTypeParser.parseMessageType(
+      "message t { required binary s; }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/t.parquet"))
+      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup().append("s", "x"))
+    finally w.close()
+    val s = spark.newSession()
+    assert(Tables.load(s, dir, "t").schema("s").dataType != StringType)
+    s.conf.set("spark.sql.parquet.binaryAsString", "true")
+    assert(Tables.load(s, dir, "t").schema("s").dataType == StringType)
+  }
+}

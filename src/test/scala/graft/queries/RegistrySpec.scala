@@ -177,6 +177,69 @@ class RegistrySpec extends SparkTestBase {
   }
 
   // ---------------------------------------------------------------------
+  // The plan-size budget (PLANS.md, "severed lazy-checkpoint leaves"): a
+  // consumer that references a full-lineage frame splices that frame's
+  // whole build subtree into its analyzed plan once per reference — gr7
+  // referenced the edge list five times and its plan grew to 494 KB — and
+  // every invocation re-pays Catalyst and AQE over it. The rule: every
+  // query's analyzed plan stays within a byte budget on its tree string.
+  // ---------------------------------------------------------------------
+
+  private object PlanSizeLint {
+    /** Bytes of the analyzed plan's tree string. */
+    def size(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.treeString.length
+
+    /** 128 KiB: the largest plan at sf0.001 is sk6_hll_intersection's
+      * 94 KB (then d24 at 86 KB, sk7 at 78 KB), so the budget leaves about
+      * a third of headroom, for attribute ids that grow a digit in a long
+      * session. Never raised to get a pass: a plan over it gets a
+      * checkpointed leaf, as the gr family did.
+      */
+    val budget: Int = 128 * 1024
+  }
+
+  test("plan lint: every analyzed plan stays within the size budget " +
+    "(the spliced-lineage rule, mechanized)") {
+    val sizes = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> PlanSizeLint.size(fn(spark, sf))
+    }
+    val over = sizes.filter(_._2 > PlanSizeLint.budget)
+    assert(over.isEmpty,
+      s"analyzed plans over ${PlanSizeLint.budget} bytes (reference a " +
+        "checkpointed leaf, not a full-lineage frame):\n" + over.mkString("\n"))
+  }
+
+  test("plan-size lint is failing-by-construction on an unsevered " +
+    "propagation loop and green on severed rounds") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.ops.Blocks
+    // hbRegisters' round shape over the full-lineage edge list: each round
+    // reads the previous one twice (union arm + edge join), so without a
+    // severed leaf per round the analyzed plan doubles every round
+    val e = GraphQueries.graphBase(spark, sf).e
+    def rounds(sever: DataFrame => DataFrame): DataFrame =
+      (1 to 6).foldLeft(e.select(col("src").as("id"))) { (prev, _) =>
+        sever(prev.unionAll(
+          e.join(prev.withColumnRenamed("id", "nbr"), col("dst") === col("nbr"))
+            .select(col("src").as("id"))).distinct())
+      }
+    assert(PlanSizeLint.size(rounds(identity)) > PlanSizeLint.budget,
+      "the lint must flag a plan that splices every round's lineage")
+    val leaves = scala.collection.mutable.Buffer.empty[DataFrame]
+    try {
+      val severed = rounds { df =>
+        val cp = Blocks.checkpoint(df, eager = false)
+        leaves += cp
+        cp
+      }
+      assert(PlanSizeLint.size(severed) <= PlanSizeLint.budget,
+        "the lint must accept rounds read from checkpointed leaves")
+    } finally leaves.foreach(Blocks.unpersist)
+  }
+
+  // ---------------------------------------------------------------------
   // The inferred-filter lint (PLANS.md, d25 / ngramJaccard): a plain
   // explode of an array ATTRIBUTE lets InferFiltersFromGenerate add
   // `size(arr) > 0`, and alias substitution pushes it down with the whole

@@ -284,6 +284,28 @@ class StreamingSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("counts mat-view fails on a view it cannot read instead of " +
+    "overwriting it with one batch") {
+    // a session that skips corrupt files infers no schema from a view
+    // whose only file is corrupt: Spark raises the same AnalysisException
+    // as for a missing path, which must not read as "no view yet"
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.files.ignoreCorruptFiles", "true")
+    val ms = MemoryStream[StreamOps.Evt](s2)
+    val dir = java.nio.file.Files.createTempDirectory("graft-matview")
+    val view = java.nio.file.Files.createDirectory(dir.resolve("view"))
+    val file = view.resolve("part-00000.parquet")
+    java.nio.file.Files.write(file, "not parquet".getBytes("UTF-8"))
+    val q = StreamOps.startCountsMatView(ms.toDF(), view.toString, s"$dir/ckpt")
+    try {
+      ms.addData(StreamOps.Evt(1, ts(5), 1, "click", 1.0))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(java.nio.file.Files.exists(file), "the view must not be overwritten")
+    } finally q.stop()
+  }
+
   test("dedup ingest sink lands each key once across batches, keep-first") {
     implicit val sql = spark.sqlContext
     val ms = MemoryStream[StreamOps.Evt]
