@@ -5,6 +5,7 @@ import java.lang.ref.WeakReference
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 
 /** The table catalog: loaders for the driver-generated corpus (TESTDATA.md)
@@ -22,6 +23,13 @@ import org.apache.spark.sql.types.StructType
   * changed table as nulls. Each load still builds a fresh relation with
   * its own file listing and fresh attribute ids, so two loads of one
   * table self-join as before.
+  *
+  * The same catalog answers "is this the same corpus?" for everything
+  * derived from a table. [[fileSet]] exposes the listing as an opaque
+  * key, which [[graft.ops.SharedBase]] keys its in-session bases on, and
+  * [[contentKey]] memoizes [[graft.ops.PersistedBase.corpusKey]] on each
+  * table's entry, so the store's content aggregate runs once per file
+  * set, not once per call.
   *
   * Session scope: the inferred schema depends on the session's reader
   * conf (`nanosAsLong` turns `events.ts` into BIGINT), so entries belong
@@ -46,6 +54,22 @@ object Tables {
   /** The parquet table at `path`, read with its catalogued schema. */
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Catalog.schema(spark, path)).parquet(path)
+
+  /** The committed leaf-file set under `path` (one table, or a whole
+    * corpus directory) as an opaque key: two calls return equal keys
+    * exactly while no leaf file under `path` was added, removed or
+    * rewritten. It is the listing the catalog keys each schema on.
+    */
+  def fileSet(s: SparkSession, path: String): AnyRef = Catalog.leaves(s, path)
+
+  /** The content key of `cols` in `table`: [[graft.ops.PersistedBase.corpusKey]]
+    * over those columns, computed once per catalog entry. The key rides
+    * the table's entry, so it is dropped with it: a new session, a reader
+    * conf change or a changed file set computes it again, and a warm call
+    * runs no job.
+    */
+  def contentKey(s: SparkSession, sfDir: String, table: String, cols: String*): String =
+    Catalog.contentKey(s, s"$sfDir/$table.parquet", cols)
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -75,7 +99,7 @@ object Tables {
     * filter on the RAW column before converting in that query.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, unix_micros}
+    import org.apache.spark.sql.functions.unix_micros
     import org.apache.spark.sql.types.LongType
     val df = load(s, d, "events")
     df.schema("ts").dataType match {
@@ -88,9 +112,13 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
   private object Catalog {
-    private final case class Leaf(path: String, length: Long, modified: Long)
+    final case class Leaf(path: String, length: Long, modified: Long)
+    /** `keys` holds the content keys computed under this entry, by
+      * column names.
+      */
     private final case class Entry(files: Seq[Leaf], conf: Map[String, String],
-                                   schema: StructType)
+                                   schema: StructType,
+                                   keys: Map[Seq[String], String] = Map.empty)
 
     private var session = new WeakReference[SparkSession](null)
     private val entries = scala.collection.mutable.HashMap.empty[String, Entry]
@@ -99,7 +127,24 @@ object Tables {
       * reader conf, committed file set). A missing or empty table is
       * never catalogued: its inference throws Spark's own error.
       */
-    def schema(s: SparkSession, path: String): StructType = {
+    def schema(s: SparkSession, path: String): StructType = entry(s, path).schema
+
+    /** The content key of `cols` at `path`, computed once per entry. */
+    def contentKey(s: SparkSession, path: String, cols: Seq[String]): String = {
+      val e = entry(s, path)
+      e.keys.getOrElse(cols, {
+        val key = graft.ops.PersistedBase.corpusKey(
+          s.read.schema(e.schema).parquet(path), cols.map(col): _*)
+        synchronized {
+          if (session.get eq s) entries.get(path)
+            .filter(c => c.files == e.files && c.conf == e.conf)
+            .foreach(c => entries.update(path, c.copy(keys = c.keys.updated(cols, key))))
+        }
+        key
+      })
+    }
+
+    private def entry(s: SparkSession, path: String): Entry = {
       val files = leaves(s, path)
       val conf = readerConf(s)
       val hit = synchronized {
@@ -109,14 +154,14 @@ object Tables {
         }
         entries.get(path).filter(e => e.files == files && e.conf == conf)
       }
-      hit.map(_.schema).getOrElse {
+      hit.getOrElse {
         // inferred outside the lock: a concurrent load of another table
         // does not wait on this job
-        val inferred = s.read.parquet(path).schema
+        val e = Entry(files, conf, s.read.parquet(path).schema)
         synchronized {
-          if (session.get eq s) entries.update(path, Entry(files, conf, inferred))
+          if (session.get eq s) entries.update(path, e)
         }
-        inferred
+        e
       }
     }
 
@@ -133,7 +178,7 @@ object Tables {
     /** Every leaf file under `path` (or `path` itself), sorted; empty when
       * `path` does not exist.
       */
-    private def leaves(s: SparkSession, path: String): Seq[Leaf] = {
+    def leaves(s: SparkSession, path: String): Seq[Leaf] = {
       val root = new Path(path)
       val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       def walk(p: Path): Seq[Leaf] = fs.listStatus(p).toSeq

@@ -41,7 +41,6 @@ object ModelRegistry {
   private val models = new java.util.concurrent.ConcurrentHashMap[String, EnergyModel]()
   def getOrLoad(label: String, load: () => EnergyModel): EnergyModel =
     models.computeIfAbsent(label, _ => load())
-  def loadedCount: Int = models.size
 
   // batched backends live in the same per-JVM cache, separate key space
   private val backends = new java.util.concurrent.ConcurrentHashMap[String, BatchedBackend]()
@@ -246,15 +245,5 @@ object Predict {
         throw new IllegalArgumentException(
           "cascade: filter step before any inference step")
     }._1
-  }
-
-  /** A4 `count_steps` (adslab_predictions.py:365-387): per inference step,
-    * adslabs actually scored.
-    */
-  def countSteps(df: DataFrame, labels: Seq[String]): DataFrame = {
-    val aggs = labels.map(l =>
-      sum(when(col(minCol(l)).isNotNull, size(col(dECol(l)))).otherwise(0))
-        .as(s"n_scored_$l"))
-    df.agg(sum(size(col("adslab_configs"))).as("n_adslabs_total"), aggs: _*)
   }
 }

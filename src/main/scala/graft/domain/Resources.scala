@@ -1,15 +1,15 @@
 package graft.domain
 
 import org.apache.spark.resource.{ExecutorResourceRequests, ResourceProfile, ResourceProfileBuilder, TaskResourceRequests}
-import org.apache.spark.rdd.RDD
 
 /** M4 heterogeneous-stage scheduling (reference: Dask GPU annotations,
   * prediction_steps.py:319-342 + `resources: GPU=1` worker pools).
   *
   * Spark-native form: stage-level scheduling via `ResourceProfile` — the
-  * enumeration stages run on default (CPU) executors; the inference stage's
-  * RDD is tagged with a GPU profile so dynamic-allocation clusters schedule
-  * it onto GPU executors. In `local[*]` mode profiles are accepted but
+  * enumeration stages run on default (CPU) executors; an inference stage's
+  * RDD tagged with this profile (`rdd.withResources(gpuProfile())`) is
+  * scheduled by dynamic-allocation clusters onto GPU executors. In
+  * `local[*]` mode profiles are accepted but
   * no-op (no cluster manager to honor them), so this is exercised as plan
   * metadata in tests and is live on a real cluster unchanged.
   */
@@ -25,8 +25,4 @@ object Resources {
     val treq = new TaskResourceRequests().resource("gpu", 1)
     new ResourceProfileBuilder().require(ereq).require(treq).build()
   }
-
-  /** Pin an inference-stage RDD to GPU executors. */
-  def onGpu[T](rdd: RDD[T], profile: ResourceProfile): RDD[T] =
-    rdd.withResources(profile)
 }

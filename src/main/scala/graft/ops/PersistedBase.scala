@@ -19,12 +19,18 @@ import org.apache.spark.sql.functions._
   * those columns — a column-pruned scan, no payload bytes beyond the
   * named columns. Any insert, delete, or key-column update changes the
   * fingerprint and the store entry is rebuilt; entries for superseded
-  * keys are just dead files (bounded housekeeping, deleted lazily). At
-  * 100 TB even the pruned scan is worth skipping: a production
-  * deployment keys on the table's snapshot/version id (Delta/Iceberg
-  * commit, partition manifest) — zero-scan — and refreshes APPENDS via
-  * the d15 anti-join discipline instead of rebuilding; the content hash
-  * is the engine-portable fallback this sandbox can actually exercise.
+  * keys are just dead files (bounded housekeeping, deleted lazily).
+  * Callers take the key from [[graft.Tables.contentKey]], which runs the
+  * pass once per (session, reader conf, committed file set) of the
+  * table: a warm call runs no job, and a rewritten file computes it
+  * again. A byte-identical rewrite gets a new file set but the same key,
+  * so the store entry survives it, in this session and in the next.
+  * At 100 TB even the one pruned scan per file set is worth skipping: a
+  * production deployment keys on the table's snapshot/version id
+  * (Delta/Iceberg commit, partition manifest) — zero-scan — and
+  * refreshes APPENDS via the d15 anti-join discipline instead of
+  * rebuilding; the content hash is the engine-portable fallback that
+  * works on plain parquet files.
   *
   * Write protocol: build → write to a PER-ATTEMPT unique `.tmp-<uuid>`
   * sibling → atomic rename into the keyed path. The unique suffix is

@@ -6,8 +6,17 @@ import org.apache.spark.sql.SparkSession
   * checkpointed intermediates a FAMILY of queries reuses (the triangle
   * family's oriented edge list + adjacency arrays, the dedup family's
   * connected-component labels). Index-build discipline: built once per
-  * (session, data dir), shared by every family member and every bench
-  * iteration; building for a NEW key releases the superseded value first,
+  * (session, data dir, committed file set under the dir), shared by
+  * every family member and every bench iteration.
+  *
+  * The file set is [[graft.Tables.fileSet]], the listing the table
+  * catalog keys each schema on, so there is one notion of "same corpus":
+  * a table rewritten, added or removed under the dir rebuilds the base
+  * instead of serving the old rows, or a plan over files that no longer
+  * exist. A rewrite of a table the builder does not read rebuilds too;
+  * that is correct, and rare.
+  *
+  * Building for a NEW key releases the superseded value first,
   * so a long-lived session holds exactly one copy — the invariant
   * BlocksSpec pins (round 5 measured the alternative: per-invocation
   * checkpoints that were never unpersisted accumulated in the block
@@ -32,14 +41,14 @@ private[graft] final class SharedBase[V](name: String,
                                          build: (SparkSession, String) => V,
                                          release: V => Unit,
                                          materialize: V => Unit = (_: V) => ()) {
-  private var cache: Option[((SparkSession, String), V)] = None
+  private var cache: Option[((SparkSession, String, AnyRef), V)] = None
 
-  def get(s: SparkSession, d: String): V = synchronized {
-    val key = (s, d)
-    cache match {
+  def get(s: SparkSession, d: String): V = {
+    val key = (s, d, graft.Tables.fileSet(s, d))
+    synchronized(cache match {
       case Some((k, v)) if k == key => v
       case prev =>
-        prev.foreach { case ((ps, _), v) =>
+        prev.foreach { case ((ps, _, _), v) =>
           if (!ps.sparkContext.isStopped) release(v) }
         val t0 = System.nanoTime()
         val v = build(s, d)
@@ -49,7 +58,7 @@ private[graft] final class SharedBase[V](name: String,
         }
         cache = Some((key, v))
         v
-    }
+    })
   }
 }
 

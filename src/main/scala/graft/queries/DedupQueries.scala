@@ -45,14 +45,14 @@ object DedupQueries extends QueryPack {
 
   // Shared dup-labels base for the connected-components family (d7
   // groups, d8 apply, d14 split): the expensive part — LSH candidate
-  // pairs + the iterative CC loop — runs ONCE per (session, dir) behind a
-  // cache-and-release memo ([[graft.ops.SharedBase]], triangle-family
-  // discipline); each family member then pays only its own cheap tail
-  // (a sort, a group-size aggregate, a split map). The returned frame is
-  // `docs ⟕ labels` over CC's internally-cached final label table — that
-  // single checkpoint root is what eviction releases; construction is
-  // eager (the CC loop's convergence checks run jobs), index-build
-  // discipline like IVF/PQ training.
+  // pairs + the iterative CC loop — runs ONCE per (session, dir, file set)
+  // behind a cache-and-release memo ([[graft.ops.SharedBase]],
+  // triangle-family discipline); each family member then pays only its
+  // own cheap tail (a sort, a group-size aggregate, a split map). The
+  // returned frame is `docs ⟕ labels` over CC's internally-cached final
+  // label table — that single checkpoint root is what eviction releases;
+  // construction is eager (the CC loop's convergence checks run jobs),
+  // index-build discipline like IVF/PQ training.
   private val dupLabelsCache = new graft.ops.SharedBase[DataFrame](
     // construction is EAGER (the CC loop's convergence checks run jobs),
     // so the default no-op materializer already leaves the honest build
@@ -104,7 +104,8 @@ object DedupQueries extends QueryPack {
     // content-keyed parquet store ([[graft.ops.PersistedBase]]). The
     // SharedBase memo makes the second query of a SESSION free; this
     // makes the second session free — a fresh JVM pays one key probe
-    // (one column-pruned aggregate over (doc_id, text)) + a small parquet
+    // (one column-pruned aggregate over (doc_id, text), memoized in the
+    // table catalog for the rest of the session) + a small parquet
     // read instead of the full LSH + iterative-CC build (measured at
     // sf0.1: build 4.2 s, warm store serve ~0.3 s). Invalidation = the
     // content key: any doc insert/delete/edit changes it and the entry
@@ -113,9 +114,7 @@ object DedupQueries extends QueryPack {
     // the production zero-scan variant (snapshot id + d15 anti-join
     // refresh for appends) are documented on PersistedBase.
     "d7b_dup_groups_persisted" -> ((s, d) => {
-      val docs = Tables.documents(s, d)
-      val key = graft.ops.PersistedBase.corpusKey(docs,
-        col("doc_id"), col("text"))
+      val key = Tables.contentKey(s, d, "documents", "doc_id", "text")
       // cold build goes THROUGH the in-session memo, so a session running
       // both d7 and d7b builds the CC labels exactly once
       // version 1 = the r9 dupLabels closure (MinHash banding + CC);

@@ -88,10 +88,10 @@ object GraphQueries extends QueryPack {
     * gr1/gr4/gr5/gr8 each re-shuffled the result into their own
     * short-lived src-partitioned persist while gr1/gr4/gr7/gr8 also
     * re-derived the node set (gr7 twice — once in hbRegisters, once in
-    * the readout). Memoized once per (session, dir) under the SharedBase
-    * protocol: build timed and disclosed in the bench `builds` dict,
-    * superseded entries released, laziness preserved for explain-only
-    * flows (tri_base discipline).
+    * the readout). Memoized once per (session, dir, file set) under the
+    * SharedBase protocol: build timed and disclosed in the bench
+    * `builds` dict, superseded entries released, laziness preserved for
+    * explain-only flows (tri_base discipline).
     *
     * Build spelling pays ONE exchange where the old per-query chain paid
     * two: union → repartition(src) → dropDuplicates (hashpartitioning on
@@ -191,9 +191,9 @@ object GraphQueries extends QueryPack {
                                           orientedSevered: DataFrame)
 
   // Memoized triangle base ([[graft.ops.SharedBase]] cache-and-release) —
-  // built ONCE per (session, dir), reused by gt1, gt2, and every bench
-  // iteration; round 5's per-invocation checkpoints were never unpersisted
-  // and their accumulated blocks' GC pressure surfaced in UNRELATED
+  // built ONCE per (session, dir, file set), reused by gt1, gt2, and every
+  // bench iteration; round 5's per-invocation checkpoints were never
+  // unpersisted and their accumulated blocks' GC pressure surfaced in UNRELATED
   // queries' timed windows (t1_langid ~1.0 s → ~1.9 s full-registry,
   // while unchanged standalone). Both frames are cached: `oriented`
   // feeds the enumeration joins AND gt1's edge census, `adj` feeds two
@@ -335,8 +335,7 @@ object GraphQueries extends QueryPack {
     // + adjacency build (sf0.1: 4.2 s; sf10: 105 s). Cold build goes
     // through the in-session memo, so gt2 and gt2b share one build.
     "gt2b_triangle_top_persisted" -> ((s, d) => {
-      val key = graft.ops.PersistedBase.corpusKey(
-        Tables.lineitem(s, d), col("l_orderkey"), col("l_partkey"))
+      val key = Tables.contentKey(s, d, "lineitem", "l_orderkey", "l_partkey")
       // version 1 = the r9 triBase closure; bump on any semantic change
       // to the co-purchase edge/adjacency derivation (PersistedBase rule)
       val oriented = graft.ops.PersistedBase.getOrBuild(
@@ -844,13 +843,12 @@ object GraphQueries extends QueryPack {
   /** Shared content key for the persisted graph-family bases: one
     * order-independent fingerprint per source table, over EXACTLY the
     * columns [[edges]] derives from (two column-pruned aggregate scans —
-    * the probe cost a warm session pays instead of the build).
+    * the probe cost a new session pays instead of the build, once per
+    * file set through the table catalog).
     */
   private[graft] def graphEdgesKey(s: SparkSession, d: String): String = {
-    val ok = graft.ops.PersistedBase.corpusKey(Tables.orders(s, d),
-      col("o_orderkey"), col("o_custkey"))
-    val lk = graft.ops.PersistedBase.corpusKey(Tables.lineitem(s, d),
-      col("l_orderkey"), col("l_suppkey"), col("l_returnflag"))
+    val ok = Tables.contentKey(s, d, "orders", "o_orderkey", "o_custkey")
+    val lk = Tables.contentKey(s, d, "lineitem", "l_orderkey", "l_suppkey", "l_returnflag")
     s"$ok.$lk"
   }
 

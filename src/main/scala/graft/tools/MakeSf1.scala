@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 /** sf1 corpus generator: replicate sf0.1 10× into a FULL corpus (all ten
-  * tables, not just the extension three like [[Scale10]]) so graft.Bench
+  * tables) so graft.Bench
   * can run unmodified at 10× data — the scale-creep detector sf0.1 can't
   * be: a stage that is secretly O(n²) (hot posting list, unblocked pair
   * join, per-group quadratic window) grows ~100× here and stands out

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Shared honest-scaling transforms for the replication harnesses
-  * ([[Scale10]], [[MakeSf1]]): copy 0 is the base corpus verbatim; copy c
+/** Honest-scaling transforms for the replication harness
+  * ([[MakeSf1]]): copy 0 is the base corpus verbatim; copy c
   * gets a transform that preserves WITHIN-copy structure exactly while
   * decorrelating copies from each other — so a 10× corpus is 10× the
   * work, not 10 aliases of the same work and not a lattice of cross-copy

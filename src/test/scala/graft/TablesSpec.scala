@@ -1,7 +1,10 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
@@ -14,7 +17,8 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType}
 
 /** Pins the table catalog ([[Tables]]): a warm load plans no job, and a
-  * changed file set or another session is never served a stale schema.
+  * changed file set or another session is never served a stale schema or
+  * content key.
   */
 class TablesSpec extends SparkTestBase {
   import spark.implicits._
@@ -67,6 +71,58 @@ class TablesSpec extends SparkTestBase {
     assert(after.columns.toSeq == Seq("id", "n"))
     assert(after.as[(Long, Long)].collect().toSeq == Seq((2L, 7L)),
       "the new rows must read through, never as nulls")
+  }
+
+  test("a warm content key runs no job") {
+    val dir = tempDir("tables-key-warm")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val key = Tables.contentKey(spark, dir, "t", "k", "v")
+    assert(jobsDuring(spark)(
+      assert(Tables.contentKey(spark, dir, "t", "k", "v") == key)) == 0)
+    assert(key == graft.ops.PersistedBase.corpusKey(
+      Tables.load(spark, dir, "t"), col("k"), col("v")),
+      "the memoized key is the store's content hash")
+  }
+
+  test("a key-column rewrite changes the content key") {
+    val dir = tempDir("tables-key-rewrite")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val key = Tables.contentKey(spark, dir, "t", "k", "v")
+    Seq((1L, "a"), (2L, "c")).toDF("k", "v").write.mode("overwrite")
+      .parquet(s"$dir/t.parquet")
+    assert(Tables.contentKey(spark, dir, "t", "k", "v") != key)
+  }
+
+  test("a byte-identical rewrite gives a new file set and the same content " +
+    "key, and d7b then writes no new store entry") {
+    val dir = tempDir("tables-key-identical")
+    val src = Paths.get(s"$sf/documents.parquet")
+    val dst = Paths.get(s"$dir/documents.parquet")
+    Files.copy(src, dst)
+    val storeRoot = Paths.get(sys.env.getOrElse("GRAFT_STORE_DIR",
+      s"${sys.props("java.io.tmpdir")}/graft-store"))
+    def dupLabelEntries: Set[String] =
+      if (!Files.isDirectory(storeRoot)) Set.empty
+      else {
+        val ls = Files.list(storeRoot)
+        try ls.iterator.asScala.map(_.getFileName.toString)
+          .filter(_.startsWith("dup_labels-")).toSet
+        finally ls.close()
+      }
+    def d7b(): Unit =
+      assert(SparkEntry.queries("d7b_dup_groups_persisted")(spark, dir).count() > 0)
+    val files = Tables.fileSet(spark, dir)
+    val key = Tables.contentKey(spark, dir, "documents", "doc_id", "text")
+    d7b()
+    val entries = dupLabelEntries
+    Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
+    Files.setLastModifiedTime(dst,
+      FileTime.fromMillis(Files.getLastModifiedTime(dst).toMillis + 10000L))
+    assert(Tables.fileSet(spark, dir) != files, "a rewrite is a new file set")
+    assert(Tables.contentKey(spark, dir, "documents", "doc_id", "text") == key,
+      "the same bytes keep the content key")
+    d7b()
+    assert(dupLabelEntries == entries, "the serve must reuse the stored entry")
   }
 
   test("a file added to a directory-style table is picked up") {

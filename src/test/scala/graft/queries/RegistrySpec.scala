@@ -368,6 +368,82 @@ class RegistrySpec extends SparkTestBase {
       "the lint must accept the broadcast-hinted spelling")
   }
 
+  // ---------------------------------------------------------------------
+  // The typed-operator lint (rule ii): a typed Dataset operation (`map`,
+  // `flatMap`, `mapPartitions`, `groupByKey`, a typed `Aggregator`)
+  // deserializes every row into a JVM object and serializes it back — a
+  // DeserializeToObject, AppendColumns or MapElements node, or a typed
+  // aggregate expression, in the analyzed plan — where a Column
+  // expression runs codegen'd over the internal rows. The retired
+  // TopKAggregator paid exactly that in sk1, sk2, sk5 and a8. The rule:
+  // none of them in any registered query outside the allowlist, each
+  // entry with its reason. Runs on the ANALYZED plan, so the node is
+  // caught however the query spells it.
+  // ---------------------------------------------------------------------
+
+  private object TypedOpLint {
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, DeserializeToObject, MapElements}
+    import org.apache.spark.sql.execution.aggregate.TypedAggregateExpression
+
+    def check(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      val plan = df.queryExecution.analyzed
+      val nodes = plan.collect {
+        case n @ (_: DeserializeToObject | _: AppendColumns | _: MapElements) =>
+          n.nodeName
+      }
+      val aggs = plan.flatMap(_.expressions.flatMap(_.collect {
+        case a: TypedAggregateExpression => a.nodeName
+      }))
+      (nodes ++ aggs).distinct
+    }
+  }
+
+  test("plan lint: no typed-operator node outside the allowlist " +
+    "(rule ii, mechanized)") {
+    // deliberate exceptions: JVM-object work no Column expression spells
+    val allow: Map[String, String] = Map(
+      "hh1_heavy_hitters" -> ("MisraGries.Summary: a bounded 256-entry " +
+        "summary merged in any order, one global typed aggregate"),
+      "screen_e2e_fixture" -> ("the screen's typed flatMap: slab " +
+        "enumeration over Structure lattices (Pipeline stage 2)"),
+      "screen_e2e_pourbaix" -> "the screen's typed flatMap, as screen_e2e_fixture",
+      "a11_nuclearity" -> "Enumerate.enumerateSlabs over the fixture bulks",
+      "u2_geometry_scores" -> "Enumerate.enumerateSlabs over the fixture bulks",
+      "u16_invertibility" -> "Enumerate.enumerateSlabs over the fixture bulks",
+      "gt5_link_prediction" -> ("TopPairs.runLengthTopK: a stateful run-length " +
+        "pass over each partition's sorted packed pairs"),
+      "mm1_decode_features" -> ("per-partition decoder singleton " +
+        "(mapPartitions, the M2 executor-model pattern)"),
+      "s6_traj_energies" -> "binary ULM .traj parse, one typed map per file")
+    val found = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> TypedOpLint.check(fn(spark, sf))
+    }
+    val failures = found.filterNot(q => allow.contains(q._1))
+      .flatMap { case (name, nodes) => nodes.map(v => s"$name: $v") }
+    assert(failures.isEmpty,
+      "typed Dataset operations (spell them as Column expressions or a " +
+        "native aggregate):\n" + failures.mkString("\n"))
+    val stale = allow.keySet -- found.filter(_._2.nonEmpty).map(_._1)
+    assert(stale.isEmpty, s"allowlisted queries with no typed node: $stale")
+  }
+
+  test("typed-operator lint is failing-by-construction on the retired typed " +
+    "top-k spelling and green on the native aggregate") {
+    import org.apache.spark.sql.functions.{col, floor}
+    import spark.implicits._
+    val du = graft.Tables.events(spark, sf)
+      .select(floor(col("ts") / 86400000000000L).as("day"), col("user_id").as("u"))
+    // sk1's spelling before the native SmallestKLongsAgg
+    val typed = du.as[(Long, Long)].groupByKey(_._1).mapValues(_._2)
+      .agg(new RegistrySpec.RetiredSmallestLongs(32).toColumn).toDF("day", "bot")
+    assert(TypedOpLint.check(typed).nonEmpty,
+      "the lint must flag the typed groupByKey aggregate")
+    val native = du.groupBy("day")
+      .agg(graft.functions.SmallestKLongsAgg.smallestK(col("u"), 32).as("bot"))
+    assert(TypedOpLint.check(native).isEmpty,
+      "the lint must accept the native aggregate")
+  }
+
   test("every query is run-to-run deterministic (hash of sorted rows)") {
     def fingerprint(name: String): Int = {
       val df = SparkEntry.queries(name)(spark, sf)
@@ -378,5 +454,23 @@ class RegistrySpec extends SparkTestBase {
     val first = names.map(n => n -> fingerprint(n)).toMap
     val diffs = names.filter(n => fingerprint(n) != first(n))
     assert(diffs.isEmpty, s"nondeterministic queries: $diffs")
+  }
+}
+
+object RegistrySpec {
+  import org.apache.spark.sql.Encoder
+  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+  import org.apache.spark.sql.expressions.Aggregator
+
+  /** The deleted `TopKAggregator.SmallestLongs`, kept as the typed-lint
+    * fixture: the k smallest longs of each group, ascending.
+    */
+  final class RetiredSmallestLongs(k: Int) extends Aggregator[Long, List[Long], Seq[Long]] {
+    def zero: List[Long] = Nil
+    def reduce(buf: List[Long], a: Long): List[Long] = (a :: buf).sorted.take(k)
+    def merge(b1: List[Long], b2: List[Long]): List[Long] = (b1 ++ b2).sorted.take(k)
+    def finish(buf: List[Long]): Seq[Long] = buf
+    def bufferEncoder: Encoder[List[Long]] = ExpressionEncoder[List[Long]]()
+    def outputEncoder: Encoder[Seq[Long]] = ExpressionEncoder[Seq[Long]]()
   }
 }
