@@ -40,6 +40,15 @@ import org.apache.spark.sql.SparkSession
   *     work_per_s over 2760–3790 1/s in three runs on 4 vCPUs. At 512
   *     both sets stay resident after their first pass, for ~2 MB of
   *     retained heap.
+  *   - [[graft.plans.OnePartitionExchange]], always on: most registry
+  *     tables and every small checkpoint are one partition, and each
+  *     `orderBy`, aggregate or join over one paid a shuffle-map job (plus a
+  *     range-sampling job) only for AQE to coalesce the result back into
+  *     one partition. The rule drops an exchange only when its input is
+  *     provably one partition, which satisfies every distribution, so the
+  *     answer cannot change; a switch would only add an untested plan
+  *     shape. It fires less as the data grows (Spark splits files above
+  *     4 MB), so it needs no scale cut-off either.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -63,4 +72,5 @@ object Sessions {
       // exchange).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "262144")
+      .withExtensions(_.injectQueryStagePrepRule(_ => graft.plans.OnePartitionExchange))
 }

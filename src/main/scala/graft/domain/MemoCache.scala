@@ -1,9 +1,12 @@
 package graft.domain
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 /** J6 / §4.3 — the cross-run memo cache, Spark-native.
@@ -117,13 +120,15 @@ class MemoCache(spark: SparkSession, root: String, operator: String, codeVersion
   }
 
   /** Run `compute` only for keys not yet memoized, append them as one new
-    * run, and return the memoized hits ∪ that run. Duplicate input keys
+    * run, and return the memoized hits ∪ that run; when every key hits, no
+    * run is kept and the hits alone return. Duplicate input keys
     * compute and return once (the table is content-addressed, like the
     * reference's primary-keyed sqlite).
     */
   def through(input: DataFrame, keyCol: String)
              (compute: DataFrame => DataFrame): DataFrame = {
-    val layout = scan(fileSystem)
+    val fs = fileSystem
+    val layout = scan(fs)
     val prior = layout.live
     val keyed = input.withColumnRenamed(keyCol, "key")
     val misses = (if (prior.isEmpty) keyed
@@ -136,10 +141,19 @@ class MemoCache(spark: SparkSession, root: String, operator: String, codeVersion
     check(prior, schema)
     val run = new Path(table, s"run-${layout.nextSeq}")
     computed.write.parquet(run.toString)
-    val fresh = load(Seq(run), schema)
-    if (prior.isEmpty) fresh
-    else load(prior.map(_.dir), schema).join(keyed.select("key"), Seq("key"), "left_semi")
-      .union(fresh)
+    val hits = if (prior.isEmpty) None
+      else Some(load(prior.map(_.dir), schema).join(keyed.select("key"), Seq("key"), "left_semi"))
+    // every key hit: drop the zero-row run, which every later read would
+    // open; its footers say so on the driver, with no job
+    val conf = spark.sessionState.newHadoopConf()
+    if (committed(fs, run).filter(_.isFile).forall(footer(_, conf).getBlocks.asScala
+        .forall(_.getRowCount == 0))) {
+      fs.delete(run, true)
+      hits.getOrElse(spark.createDataFrame(java.util.List.of[Row](), schema))
+    } else {
+      val fresh = load(Seq(run), schema)
+      hits.fold(fresh)(_.union(fresh))
+    }
   }
 
   /** Rewrite the committed runs into one run, `run-<m>-compacted` with m
@@ -201,10 +215,13 @@ object MemoCache {
     if (committed(fs, dir).isEmpty) None else Some(spark.read.parquet(path))
   }
 
-  private def footerSchema(f: FileStatus, conf: org.apache.hadoop.conf.Configuration): StructType = {
+  private def footer(f: FileStatus, conf: org.apache.hadoop.conf.Configuration): ParquetMetadata = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-    val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
-      finally reader.close()
+    try reader.getFooter finally reader.close()
+  }
+
+  private def footerSchema(f: FileStatus, conf: org.apache.hadoop.conf.Configuration): StructType = {
+    val json = footer(f, conf).getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey)
     if (json == null) throw new IllegalStateException(s"${f.getPath} carries no Spark schema")
     DataType.fromJson(json).asInstanceOf[StructType]
   }

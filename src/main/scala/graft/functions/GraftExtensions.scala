@@ -18,7 +18,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * users get the same whole-stage-codegen kernels as the Scala API; the
   * optimizer rule [[graft.plans.RangeJoinBinningRule]] gives declarative
   * range joins the binned equi-join plan (opt-in via
-  * `spark.graft.rangeJoin.binWidth`).
+  * `spark.graft.rangeJoin.binWidth`), and the AQE rule
+  * [[graft.plans.OnePartitionExchange]] drops exchanges whose input is
+  * already one partition (as on every [[graft.Sessions]] session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -57,6 +59,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         MinHashExpr(children.head, ps.map(_._1).toArray, ps.map(_._2).toArray)
       }))
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinBinningRule)
+    ext.injectQueryStagePrepRule(_ => graft.plans.OnePartitionExchange)
     // tier (c): plans AsOfJoinNode into the native AsOfJoinExec sort-merge
     // operator (NativeAsOf.asofJoin also self-registers on plain sessions)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

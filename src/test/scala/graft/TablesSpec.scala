@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -10,9 +9,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType}
 
@@ -25,23 +21,12 @@ class TablesSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
-  /** Jobs `body` starts in `s`'s context. */
-  private def jobsDuring(s: SparkSession)(body: => Unit): Int = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(s.sparkContext)
-    s.sparkContext.addSparkListener(l)
-    try {
-      body
-      ListenerBusAccess.drain(s.sparkContext)
-    } finally s.sparkContext.removeSparkListener(l)
-    n.get
+  /** Runs `body` on a fresh temp dir, deleted afterwards. */
+  private def withTempDir(prefix: String)(body: String => Unit): Unit = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir.toString)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
-
-  private def tempDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
 
   test("after a first build, building the registry_light queries runs no job") {
     // perfbench's registry_light workload, one query per operator family
@@ -56,85 +41,91 @@ class TablesSpec extends SparkTestBase {
   }
 
   test("a warm load runs no job; a cold one infers once") {
-    val dir = tempDir("tables-warm")
-    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
-    assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 1)
-    assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 0)
+    withTempDir("tables-warm") { dir =>
+      Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+      assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 1)
+      assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 0)
+    }
   }
 
   test("a table overwritten in place with other columns loads its new schema") {
-    val dir = tempDir("tables-overwrite")
-    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
-    assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
-    Seq((2L, 7L)).toDF("id", "n").write.mode("overwrite").parquet(s"$dir/t.parquet")
-    val after = Tables.load(spark, dir, "t")
-    assert(after.columns.toSeq == Seq("id", "n"))
-    assert(after.as[(Long, Long)].collect().toSeq == Seq((2L, 7L)),
-      "the new rows must read through, never as nulls")
+    withTempDir("tables-overwrite") { dir =>
+      Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+      assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("k", "v"))
+      Seq((2L, 7L)).toDF("id", "n").write.mode("overwrite").parquet(s"$dir/t.parquet")
+      val after = Tables.load(spark, dir, "t")
+      assert(after.columns.toSeq == Seq("id", "n"))
+      assert(after.as[(Long, Long)].collect().toSeq == Seq((2L, 7L)),
+        "the new rows must read through, never as nulls")
+    }
   }
 
   test("a warm content key runs no job") {
-    val dir = tempDir("tables-key-warm")
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
-    val key = Tables.contentKey(spark, dir, "t", "k", "v")
-    assert(jobsDuring(spark)(
-      assert(Tables.contentKey(spark, dir, "t", "k", "v") == key)) == 0)
-    assert(key == graft.ops.PersistedBase.corpusKey(
-      Tables.load(spark, dir, "t"), col("k"), col("v")),
-      "the memoized key is the store's content hash")
+    withTempDir("tables-key-warm") { dir =>
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+      val key = Tables.contentKey(spark, dir, "t", "k", "v")
+      assert(jobsDuring(spark)(
+        assert(Tables.contentKey(spark, dir, "t", "k", "v") == key)) == 0)
+      assert(key == graft.ops.PersistedBase.corpusKey(
+        Tables.load(spark, dir, "t"), col("k"), col("v")),
+        "the memoized key is the store's content hash")
+    }
   }
 
   test("a key-column rewrite changes the content key") {
-    val dir = tempDir("tables-key-rewrite")
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
-    val key = Tables.contentKey(spark, dir, "t", "k", "v")
-    Seq((1L, "a"), (2L, "c")).toDF("k", "v").write.mode("overwrite")
-      .parquet(s"$dir/t.parquet")
-    assert(Tables.contentKey(spark, dir, "t", "k", "v") != key)
+    withTempDir("tables-key-rewrite") { dir =>
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+      val key = Tables.contentKey(spark, dir, "t", "k", "v")
+      Seq((1L, "a"), (2L, "c")).toDF("k", "v").write.mode("overwrite")
+        .parquet(s"$dir/t.parquet")
+      assert(Tables.contentKey(spark, dir, "t", "k", "v") != key)
+    }
   }
 
   test("a byte-identical rewrite gives a new file set and the same content " +
     "key, and d7b then writes no new store entry") {
-    val dir = tempDir("tables-key-identical")
-    val src = Paths.get(s"$sf/documents.parquet")
-    val dst = Paths.get(s"$dir/documents.parquet")
-    Files.copy(src, dst)
-    val storeRoot = Paths.get(sys.env.getOrElse("GRAFT_STORE_DIR",
-      s"${sys.props("java.io.tmpdir")}/graft-store"))
-    def dupLabelEntries: Set[String] =
-      if (!Files.isDirectory(storeRoot)) Set.empty
-      else {
-        val ls = Files.list(storeRoot)
-        try ls.iterator.asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("dup_labels-")).toSet
-        finally ls.close()
-      }
-    def d7b(): Unit =
-      assert(SparkEntry.queries("d7b_dup_groups_persisted")(spark, dir).count() > 0)
-    val files = Tables.fileSet(spark, dir)
-    val key = Tables.contentKey(spark, dir, "documents", "doc_id", "text")
-    d7b()
-    val entries = dupLabelEntries
-    Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
-    Files.setLastModifiedTime(dst,
-      FileTime.fromMillis(Files.getLastModifiedTime(dst).toMillis + 10000L))
-    assert(Tables.fileSet(spark, dir) != files, "a rewrite is a new file set")
-    assert(Tables.contentKey(spark, dir, "documents", "doc_id", "text") == key,
-      "the same bytes keep the content key")
-    d7b()
-    assert(dupLabelEntries == entries, "the serve must reuse the stored entry")
+    withTempDir("tables-key-identical") { dir =>
+      val src = Paths.get(s"$sf/documents.parquet")
+      val dst = Paths.get(s"$dir/documents.parquet")
+      Files.copy(src, dst)
+      val storeRoot = Paths.get(sys.env.getOrElse("GRAFT_STORE_DIR",
+        s"${sys.props("java.io.tmpdir")}/graft-store"))
+      def dupLabelEntries: Set[String] =
+        if (!Files.isDirectory(storeRoot)) Set.empty
+        else {
+          val ls = Files.list(storeRoot)
+          try ls.iterator.asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("dup_labels-")).toSet
+          finally ls.close()
+        }
+      def d7b(): Unit =
+        assert(SparkEntry.queries("d7b_dup_groups_persisted")(spark, dir).count() > 0)
+      val files = Tables.fileSet(spark, dir)
+      val key = Tables.contentKey(spark, dir, "documents", "doc_id", "text")
+      d7b()
+      val entries = dupLabelEntries
+      Files.copy(src, dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst,
+        FileTime.fromMillis(Files.getLastModifiedTime(dst).toMillis + 10000L))
+      assert(Tables.fileSet(spark, dir) != files, "a rewrite is a new file set")
+      assert(Tables.contentKey(spark, dir, "documents", "doc_id", "text") == key,
+        "the same bytes keep the content key")
+      d7b()
+      assert(dupLabelEntries == entries, "the serve must reuse the stored entry")
+    }
   }
 
   test("a file added to a directory-style table is picked up") {
-    val dir = tempDir("tables-append")
-    Seq(1L, 2L).toDF("k").coalesce(1).write.parquet(s"$dir/t.parquet")
-    assert(Tables.load(spark, dir, "t").count() == 2)
-    // the added file carries a column the first one lacks: a new file
-    // set is inferred again, from whichever footer Spark reads
-    Seq((3L, "x")).toDF("k", "extra").write.mode("append").parquet(s"$dir/t.parquet")
-    assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 1,
-      "a changed file set must be inferred again")
-    assert(Tables.load(spark, dir, "t").count() == 3)
+    withTempDir("tables-append") { dir =>
+      Seq(1L, 2L).toDF("k").coalesce(1).write.parquet(s"$dir/t.parquet")
+      assert(Tables.load(spark, dir, "t").count() == 2)
+      // the added file carries a column the first one lacks: a new file
+      // set is inferred again, from whichever footer Spark reads
+      Seq((3L, "x")).toDF("k", "extra").write.mode("append").parquet(s"$dir/t.parquet")
+      assert(jobsDuring(spark)(Tables.load(spark, dir, "t")) == 1,
+        "a changed file set must be inferred again")
+      assert(Tables.load(spark, dir, "t").count() == 3)
+    }
   }
 
   test("two loads of one table self-join with fresh attribute ids") {
@@ -151,38 +142,40 @@ class TablesSpec extends SparkTestBase {
     // a TIMESTAMP(NANOS) ts, the physical type nanosAsLong exists for;
     // Spark writes no nanos timestamps, so the file is written with
     // parquet's own example writer
-    val dir = tempDir("tables-nanos")
-    val schema = MessageTypeParser.parseMessageType(
-      "message events { required int64 event_id; " +
-        "required int64 ts (TIMESTAMP(NANOS,true)); }")
-    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
-      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
-    try w.write(new SimpleGroupFactory(schema).newGroup()
-      .append("event_id", 1L).append("ts", 1704067200123456789L))
-    finally w.close()
-    val nanos = Tables.events(spark, dir)
-    assert(nanos.schema("ts").dataType == LongType)
-    assert(nanos.select("ts").as[Long].head() == 1704067200123456789L)
-    val other = spark.newSession()
-    other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
-    val e = intercept[Exception](Tables.events(other, dir).schema)
-    assert(e.getMessage.contains("TIMESTAMP(NANOS"),
-      s"the other session must infer for itself: ${e.getMessage}")
-    // and the first session, back again, still reads its BIGINT nanos
-    assert(Tables.events(spark, dir).schema("ts").dataType == LongType)
+    withTempDir("tables-nanos") { dir =>
+      val schema = MessageTypeParser.parseMessageType(
+        "message events { required int64 event_id; " +
+          "required int64 ts (TIMESTAMP(NANOS,true)); }")
+      val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+        .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup()
+        .append("event_id", 1L).append("ts", 1704067200123456789L))
+      finally w.close()
+      val nanos = Tables.events(spark, dir)
+      assert(nanos.schema("ts").dataType == LongType)
+      assert(nanos.select("ts").as[Long].head() == 1704067200123456789L)
+      val other = spark.newSession()
+      other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+      val e = intercept[Exception](Tables.events(other, dir).schema)
+      assert(e.getMessage.contains("TIMESTAMP(NANOS"),
+        s"the other session must infer for itself: ${e.getMessage}")
+      // and the first session, back again, still reads its BIGINT nanos
+      assert(Tables.events(spark, dir).schema("ts").dataType == LongType)
+    }
   }
 
   test("a reader-conf change within a session re-infers") {
-    val dir = tempDir("tables-conf")
-    val schema = MessageTypeParser.parseMessageType(
-      "message t { required binary s; }")
-    val w = ExampleParquetWriter.builder(new Path(s"$dir/t.parquet"))
-      .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
-    try w.write(new SimpleGroupFactory(schema).newGroup().append("s", "x"))
-    finally w.close()
-    val s = spark.newSession()
-    assert(Tables.load(s, dir, "t").schema("s").dataType != StringType)
-    s.conf.set("spark.sql.parquet.binaryAsString", "true")
-    assert(Tables.load(s, dir, "t").schema("s").dataType == StringType)
+    withTempDir("tables-conf") { dir =>
+      val schema = MessageTypeParser.parseMessageType(
+        "message t { required binary s; }")
+      val w = ExampleParquetWriter.builder(new Path(s"$dir/t.parquet"))
+        .withType(schema).withConf(spark.sparkContext.hadoopConfiguration).build()
+      try w.write(new SimpleGroupFactory(schema).newGroup().append("s", "x"))
+      finally w.close()
+      val s = spark.newSession()
+      assert(Tables.load(s, dir, "t").schema("s").dataType != StringType)
+      s.conf.set("spark.sql.parquet.binaryAsString", "true")
+      assert(Tables.load(s, dir, "t").schema("s").dataType == StringType)
+    }
   }
 }

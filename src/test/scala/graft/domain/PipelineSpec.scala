@@ -290,6 +290,25 @@ class MemoCacheSpec extends SparkTestBase {
     assert(runDirs(table) == Seq("run-3-compacted") && cache.size() == 5)
   }
 
+  test("memo cache: an all-hit call keeps no run and returns the hits") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("memo")
+    try {
+      val acc = spark.sparkContext.longAccumulator("computed")
+      val cache = new MemoCache(spark, dir.toString, "energy", "v1")
+      assert(cache.through(Seq.empty[String].toDF("key"), "key")(counted(acc)).count() == 0)
+      assert(cache.read().isEmpty, "a call with no key keeps no run")
+      val first = rows(cache.through(Seq("a", "bb").toDF("key"), "key")(counted(acc)))
+      val table = dir.resolve("energy/v=v1")
+      val runs = runDirs(table)
+      val again = Seq(1, 2).map(_ =>
+        cache.through(Seq("bb", "a", "a").toDF("key"), "key")(counted(acc)))
+      assert(runDirs(table) == runs, "an all-hit call must not add a run")
+      assert(again.map(rows) == Seq(first, first) && again.forall(_.count() == 2))
+      assert(acc.value == 2, "hits must not recompute")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
   test("memo cache: a committed file whose schema differs from the declared " +
     "one fails loudly") {
     import spark.implicits._

@@ -11,8 +11,23 @@ class PlanSpec extends SparkTestBase {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The query's initial adaptive plan, planned [[withSplits]]. */
   private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    withSplits(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString)
+
+  /** Runs `body` with every sf0.001 file cut into several splits through
+    * Spark's own `maxPartitionBytes`, as the files of the larger corpora
+    * are: at one split each, [[graft.plans.OnePartitionExchange]] would drop
+    * the exchanges these shapes pin. The conf is restored after, because
+    * the session is shared.
+    */
+  private def withSplits[A](body: => A): A = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try body
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 
   test("e7 enrich: dim side broadcast, fact side never shuffled before the join") {
     val p = plan("e7_stream_static_enrich")
@@ -263,9 +278,11 @@ class PlanSpec extends SparkTestBase {
 
   test("q15: the scalar-max branch reuses the revenue view's exchange — " +
     "the fact table is scanned once at runtime") {
-    val df = SparkEntry.queries("q15_top_supplier")(spark, sf)
-    df.collect() // AQE finalizes stage reuse only during execution
-    val p = df.queryExecution.executedPlan.toString
+    val p = withSplits {
+      val df = SparkEntry.queries("q15_top_supplier")(spark, sf)
+      df.collect() // AQE finalizes stage reuse only during execution
+      df.queryExecution.executedPlan.toString
+    }
     assert(p.contains("ReusedExchange"),
       p.linesIterator.filter(_.contains("Exchange")).mkString("\n"))
   }
