@@ -44,11 +44,14 @@ import org.apache.spark.sql.SparkSession
   *     tables and every small checkpoint are one partition, and each
   *     `orderBy`, aggregate or join over one paid a shuffle-map job (plus a
   *     range-sampling job) only for AQE to coalesce the result back into
-  *     one partition. The rule drops an exchange only when its input is
-  *     provably one partition, which satisfies every distribution, so the
-  *     answer cannot change; a switch would only add an untested plan
-  *     shape. It fires less as the data grows (Spark splits files above
-  *     4 MB), so it needs no scale cut-off either.
+  *     one partition. The rule replaces such an exchange by a one-partition
+  *     coalesce, which satisfies every distribution whatever the input
+  *     turns out to be at execution, so the answer cannot change; a switch
+  *     would only add an untested plan shape. It fires less as the data
+  *     grows (Spark splits files above 4 MB), so it needs no scale cut-off
+  *     either. Injected here only: a session built from this builder must
+  *     not add [[graft.functions.GraftExtensions]] too, or every plan runs
+  *     the rule twice.
   */
 object Sessions {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =

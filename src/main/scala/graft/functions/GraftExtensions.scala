@@ -19,8 +19,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * optimizer rule [[graft.plans.RangeJoinBinningRule]] gives declarative
   * range joins the binned equi-join plan (opt-in via
   * `spark.graft.rangeJoin.binWidth`), and the AQE rule
-  * [[graft.plans.OnePartitionExchange]] drops exchanges whose input is
-  * already one partition (as on every [[graft.Sessions]] session).
+  * [[graft.plans.OnePartitionExchange]] turns an exchange over one
+  * planned partition into a one-partition coalesce. Every
+  * [[graft.Sessions]] session already carries that rule: add these
+  * extensions to a plain `SparkSession.builder`, not to `Sessions.builder`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -10,8 +10,10 @@ import graft.plans.RangeJoinBinningRule
   */
 object RulePlanDump {
   def main(args: Array[String]): Unit = {
+    // the range-join rule alone: all of GraftExtensions would inject
+    // OnePartitionExchange a second time, after Sessions' own
     val spark = graft.Sessions.builder("local[8]", "8")
-      .withExtensions(new graft.functions.GraftExtensions)
+      .withExtensions(_.injectOptimizerRule(_ => RangeJoinBinningRule))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
 import graft.{SparkEntry, SparkTestBase, Tables}
 import graft.ops.{Blocks, Dedup}
 
-/** Pins [[OnePartitionExchange]]: an exchange over provably one partition
-  * is dropped (one job, same rows and order), and every exchange whose
-  * input is not one partition, or that the user asked for, stays.
+/** Pins [[OnePartitionExchange]]: an exchange over one planned partition
+  * becomes a one-partition coalesce (one job, same rows and order, also
+  * when the scan runs as several partitions after all), and every exchange
+  * whose input is not one partition, or that the user asked for, stays.
   */
 class OnePartitionExchangeSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
@@ -58,6 +59,7 @@ class OnePartitionExchangeSpec extends SparkTestBase with AdaptiveSparkPlanHelpe
     assert(OnePartitionExchange.splits(scanOf(df)).contains(1))
     assert(jobsDuring(spark)(df.collect()) == 1)
     assert(shuffles(df).isEmpty, finalPlan(df))
+    assert(collect(finalPlan(df)) { case c: CoalesceExec => c.numPartitions } == Seq(1))
     val ref = SparkEntry.queries("f10_one_sided_range")(multiSplit, sf)
     assert(shuffles(ref).exists(_.outputPartitioning.isInstanceOf[RangePartitioning]))
     assert(df.collect().toSeq == ref.collect().toSeq)
@@ -123,5 +125,22 @@ class OnePartitionExchangeSpec extends SparkTestBase with AdaptiveSparkPlanHelpe
       val ref = q(Tables.orders(multiSplit, sf).select("o_custkey", "o_totalprice"))
       assert(df.collect().toSeq == ref.collect().toSeq)
     } finally Blocks.unpersist(cp)
+  }
+
+  test("(g) a scan planned as one split that runs as several still gives a " +
+    "global aggregate one row") {
+    val q = (s: SparkSession) => Tables.orders(s, sf)
+      .agg(count(lit(1)).as("n"), max("o_orderkey").as("k"))
+    val s = session()
+    val df = q(s)
+    assert(OnePartitionExchange.splits(scanOf(df)).contains(1))
+    val planned = df.queryExecution.executedPlan
+    assert(collect(planned) { case e: ShuffleExchangeExec => e }.isEmpty, planned)
+    // the scan reads the conf again when it builds its RDD
+    s.conf.set(split._1, split._2)
+    val rows = df.collect()
+    val ran = collect(df.queryExecution.executedPlan) { case f: FileSourceScanExec => f }
+    assert(ran.map(_.inputRDD.getNumPartitions) match { case Seq(n) => n > 1; case _ => false })
+    assert(rows.toSeq == q(multiSplit).collect().toSeq)
   }
 }
